@@ -10,6 +10,18 @@ Design notes (100 TB scale):
   would raise the bound to ~2-3x total cores and let AQE shrink.
 - Session timezone pinned to UTC so timestamp semantics match the DuckDB
   oracle (naive timestamps) bit-for-bit.
+- Python workers start through ``mrcond_spark.worker_daemon``. Each UDF task
+  begins with ``importlib.invalidate_caches()``. Before Python 3.13, which
+  made the re-read lazy, that makes every zipimporter re-read its archive's
+  directory at once (``pyspark.zip`` of PySpark 4.1.2 has 1,328 entries),
+  although the archive never changes; the daemon re-reads only an archive
+  whose mtime or size moved. ``spark.executorEnv.PYTHONPATH`` points at
+  this package's parent directory on the driver's disk, so the workers can
+  import the daemon module whatever the driver's working directory. That
+  holds only under the local master set here: on a cluster every executor
+  would need ``mrcond_spark`` importable at that same path. UDF closures
+  stay self-contained, so a plain session with the stock daemon still runs
+  every query without the package on its workers.
 """
 
 from __future__ import annotations
@@ -20,6 +32,9 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+#: the directory ``mrcond_spark`` is imported from, for the Python workers
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "mrcond_spark",
@@ -29,8 +44,10 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the tuned SparkSession.
 
-    Local mode stand-in for a multi-executor cluster: everything here is a
-    cluster-safe setting, nothing assumes a single JVM.
+    Local mode stand-in for a multi-executor cluster. The Python workers
+    import ``mrcond_spark`` from ``_PACKAGE_PARENT`` on the driver's disk,
+    which holds under the ``local`` master set here; every other setting is
+    cluster-safe.
     """
     cpus = cpus or DEFAULT_CPUS
     shuffle_partitions = shuffle_partitions or max(cpus, 32)
@@ -46,6 +63,8 @@ def get_spark(
         # --- python boundary ---
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        .config("spark.python.daemon.module", "mrcond_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         # --- determinism vs the DuckDB oracle ---
         .config("spark.sql.session.timeZone", "UTC")
         # Testdata parquet stores naive timestamps (isAdjustedToUTC=false).

@@ -8,6 +8,6 @@ Spark-first (SURVEY §2.1 R1–R14 → §2.3 S1–S14).
 - ``supervisor`` — fan-out + restart-classification loop (server.rs semantics)
 - ``metrics``    — the five engine_* series + Prometheus text exposition
 - ``http``       — /health + /metrics endpoint
-- ``windows``    — event-time operators: watermarks, tumbling/sliding/session
+- ``windows``    — event-time operators: watermarks, tumbling/session
                    windows, stateful dedup, stream joins, custom state
 """

@@ -1,7 +1,7 @@
 """Event-time streaming operators (SURVEY §2.3 S5–S12).
 
 North-star additions beyond the reference's pipeline (which has no event-time
-logic): watermarks, tumbling/sliding/session windows, stateful dedup, stream
+logic): watermarks, tumbling/session windows, stateful dedup, stream
 joins, and arbitrary state via ``applyInPandasWithState``.
 
 All operators take/return streaming DataFrames and are replay-tested with a
@@ -47,19 +47,6 @@ def tumbling_counts(
             F.col("win.start").alias("win_start"), F.col("win.end").alias("win_end"),
             *keys, "cnt", "sum_value",
         )
-    )
-
-
-def sliding_counts(
-    events: DataFrame, ts_col: str = "ts", duration: str = "10 minutes",
-    slide: str = "5 minutes", watermark: str = "10 minutes",
-) -> DataFrame:
-    """S6: sliding-window event counts."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), duration, slide).alias("win"))
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("win.start").alias("win_start"), F.col("win.end").alias("win_end"), "cnt")
     )
 
 
