@@ -552,9 +552,22 @@ def semantic_dedup(
     (``operators/components.py`` pointer jumping); the drop is one anti
     join. Cell population ~N/k bounds the per-cell pair blowup — pick
     n_clusters so N/k stays in the ~1e5 range and the quadratic term stays
-    sub-linear in N overall.
+    sub-linear in N overall. ``n_clusters`` also bounds the verify step's
+    parallelism: each non-empty cell is one task, whatever the cluster's
+    width, and a hot cell runs whole in one task.
+
+    ``id_col`` must be an integral column; anything else raises
+    ``ValueError`` before any job runs.
     """
+    from pyspark.sql.types import IntegralType
+
     from .components import drop_non_representatives
+
+    id_type = embeddings.schema[id_col].dataType
+    if not isinstance(id_type, IntegralType):
+        raise ValueError(
+            f"semantic_dedup: id column {id_col!r} must be integral, got {id_type.simpleString()}"
+        )
 
     centroids = sampled_kmeans_centroids(
         embeddings, vec_col=vec_col, id_col=id_col, n_clusters=n_clusters, seed=seed

@@ -22,6 +22,22 @@ Design notes (100 TB scale):
   would need ``mrcond_spark`` importable at that same path. UDF closures
   stay self-contained, so a plain session with the stock daemon still runs
   every query without the package on its workers.
+- The ``file:`` scheme runs through the engine's Hadoop file systems in
+  ``jvm/mrcond-spark-fs.jar`` (sources under ``jvm/src``, rebuilt by
+  ``tools/build_jvm.py``). PySpark ships without the native ``libhadoop``,
+  so the stock ``RawLocalFileSystem`` sets every permission by running a
+  shell ``chmod`` and reads every link status, which each atomic
+  ``FileContext.rename`` asks for, by running ``readlink``: a streaming
+  micro-batch's offsets, commits, source-log and state-delta files, each
+  with its ``.crc`` sibling, made the driver JVM start about 30 processes.
+  The engine classes do that work through ``java.nio`` and leave the rest,
+  the ``.crc`` layer, checkpoint checksums and the atomic rename included,
+  to the stock classes; a mode NIO cannot set goes to the stock code. The
+  jar rides on ``spark.driver.extraClassPath``, which under the local
+  master set here is the executors' classpath too: on a cluster every
+  executor would need the jar on its classpath as well. The settings take
+  effect only when ``get_spark`` starts the JVM: a session it takes from a
+  JVM that was already running keeps the stock classes.
 """
 
 from __future__ import annotations
@@ -34,6 +50,8 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 #: the directory ``mrcond_spark`` is imported from, for the Python workers
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+#: the engine's fork-free local file systems (see the design notes)
+FS_JAR = os.path.join(_PACKAGE_PARENT, "mrcond_spark", "jvm", "mrcond-spark-fs.jar")
 
 
 def get_spark(
@@ -46,8 +64,10 @@ def get_spark(
 
     Local mode stand-in for a multi-executor cluster. The Python workers
     import ``mrcond_spark`` from ``_PACKAGE_PARENT`` on the driver's disk,
-    which holds under the ``local`` master set here; every other setting is
-    cluster-safe.
+    and the JVM loads ``FS_JAR`` from the driver's classpath, which both
+    hold under the ``local`` master set here; every other setting is
+    cluster-safe. A ``spark.driver.extraClassPath`` in ``extra_conf`` is
+    appended to ``FS_JAR``.
     """
     cpus = cpus or DEFAULT_CPUS
     shuffle_partitions = shuffle_partitions or max(cpus, 32)
@@ -65,6 +85,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.python.daemon.module", "mrcond_spark.worker_daemon")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        # --- local file systems: no chmod/readlink processes ---
+        .config("spark.hadoop.fs.file.impl", "mrcond_spark.hadoop.NioLocalFileSystem")
+        .config("spark.hadoop.fs.AbstractFileSystem.file.impl", "mrcond_spark.hadoop.NioLocalFs")
         # --- determinism vs the DuckDB oracle ---
         .config("spark.sql.session.timeZone", "UTC")
         # Testdata parquet stores naive timestamps (isAdjustedToUTC=false).
@@ -90,7 +113,12 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    class_path = conf.pop("spark.driver.extraClassPath", None)
+    builder = builder.config(
+        "spark.driver.extraClassPath", os.pathsep.join(filter(None, [FS_JAR, class_path]))
+    )
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

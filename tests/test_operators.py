@@ -673,6 +673,22 @@ def test_semantic_dedup_clustered_recall_and_no_false_drops(spark):
     assert len(survivors) <= 60 * 0.2, f"planted-dup recall too low: {sorted(survivors)}"
 
 
+def test_semantic_dedup_rejects_non_integral_ids_before_any_job(spark):
+    from mrcond_spark.operators.similarity import semantic_dedup
+
+    df = spark.createDataFrame(
+        [("a", [1.0, 0.0]), ("b", [1.0, 0.0])], "doc STRING, embedding ARRAY<FLOAT>"
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("semantic-dedup-string-ids", "id type guard")
+    try:
+        with pytest.raises(ValueError, match="'doc'"):
+            semantic_dedup(df, id_col="doc")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("semantic-dedup-string-ids")) == []
+
+
 def test_semantic_dedup_empty_corpus(spark):
     from mrcond_spark.operators.similarity import semantic_dedup
 
