@@ -582,11 +582,10 @@ def semantic_dedup(
     # vector now ships ONCE: one shuffle of (id, cell, vec) keyed by cell,
     # and the per-cell pairwise cosines come from one numpy Gram matmul
     # per group, emitting only the qualifying (id_a < id_b) pairs.
-    # Exactness: same float64 dot/norm/ratio math as cosine_pairs_udf on
-    # the same bytes, and the corpus premise the planted oracles build on
-    # (no NATURAL pair approaches the threshold; planted duplicates sit at
-    # exactly 1.0) keeps the >= threshold relation insensitive to
-    # summation order — swept hash-exact at sf0.01/sf0.1/sf1.
+    # Exactness: the Gram block's dot products ride BLAS dgemm, whose
+    # blocked summation order can move the last ulp, so the cosine is
+    # rounded to 4 dp before the >= gate (as cosine_topk does): a pair one
+    # ulp below the threshold then verifies on every BLAS build.
     # 100 TB: the cell shuffle is the corpus's single full pass (SemDeDup's
     # per-cell quadratic verify is the algorithm's stated cost — size
     # n_clusters so cells stay ~1e5); the row-CHUNKED loop bounds the score
@@ -608,7 +607,7 @@ def semantic_dedup(
             g = a[lo:hi] @ a.T
             den = np.outer(nrm[lo:hi], nrm)
             cos = np.where(den > 0, g / np.maximum(den, 1e-300), 0.0)
-            ii, jj = np.nonzero(cos >= thr)
+            ii, jj = np.nonzero(np.round(cos, 4) >= thr)
             ia, jb = ids[ii + lo], ids[jj]
             keep = ia != jb  # self-pairs score 1.0; drop them, order the rest
             pa, pb = np.minimum(ia[keep], jb[keep]), np.maximum(ia[keep], jb[keep])

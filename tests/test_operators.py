@@ -648,6 +648,37 @@ def test_semantic_dedup_single_cluster_equals_all_pairs(spark):
     assert kept == set(range(30)), f"kept {sorted(kept)}"
 
 
+def test_semantic_dedup_gate_is_rounded_like_cosine_topk(spark):
+    """The >= gate compares the cosine rounded to 4 dp, so a pair whose
+    float64 cosine lands one ulp below the threshold still verifies, however
+    the BLAS build sums the Gram block. Found with numpy's own arithmetic:
+    ``a = (1, 0)`` makes every dot product exact, so the unrounded cosine is
+    the same on any BLAS."""
+    import numpy as np
+
+    from mrcond_spark.operators.similarity import semantic_dedup
+
+    thr = 0.95
+    below = np.nextafter(thr, 0.0)
+    y0 = float(np.sqrt(1 - thr * thr))
+    pairs = (
+        (thr + i * np.spacing(thr), y0 + j * np.spacing(y0))
+        for i in range(50) for j in range(-50, 50)
+    )
+    for x, y in pairs:
+        a = np.array([[1.0, 0.0], [x, y]])
+        nrm = np.linalg.norm(a, axis=1)
+        if ((a @ a.T) / np.outer(nrm, nrm))[0, 1] == below:
+            break
+    else:
+        pytest.fail("no pair one ulp below the threshold in the search grid")
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [float(x), float(y)])], "vec_id LONG, embedding ARRAY<DOUBLE>"
+    )
+    kept = [r["vec_id"] for r in semantic_dedup(df, threshold=thr, n_clusters=1).collect()]
+    assert kept == [0]
+
+
 def test_semantic_dedup_clustered_recall_and_no_false_drops(spark):
     """E2/E4 SemDeDup at the operating point (16 cells): perturbed planted
     dups land in their origin's cell almost always (tiny perturbation moves

@@ -4,7 +4,9 @@
 Times each named query with the noop sink (guide §1.4: full computation, no
 driver materialization), warm (one untimed run first), min-of-N, labeled in
 the (disabled-by-default) UI via setJobDescription, and optionally dumps
-``.explain('formatted')`` to a file per query.
+``.explain('formatted')`` to a file per query. Each query's line also gives
+``build_jobs``: the Spark jobs its last run's ``q.spark(...)`` launched
+before execution, counted through a job group.
 
 Usage:
   python tools/measure_queries.py q132_kcore q170_dedup_components
@@ -88,15 +90,25 @@ def main() -> None:
                     )
                     f.write(sub)
         samples = []
-        spark.sparkContext.setJobDescription(f"measure:{name}")
+        sc = spark.sparkContext
+        build_group = f"measure:{name}:build"
+        sc.setJobDescription(f"measure:{name}")
         for i in range(args.runs + 1):  # first run is the warm run
+            last = i == args.runs
             t0 = time.perf_counter()
-            q.spark(spark, args.sf).write.format("noop").mode("overwrite").save()
+            if last:  # count the jobs the last run's construction launches
+                sc.setJobGroup(build_group, f"measure:{name}")
+            df = q.spark(spark, args.sf)
+            if last:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            df.write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
             if i > 0:
                 samples.append(round(dt, 3))
-        spark.sparkContext.setJobDescription(None)
-        results[name] = {"min": min(samples), "samples": samples}
+        sc.setJobDescription(None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts reach the tracker
+        build_jobs = len(sc.statusTracker().getJobIdsForGroup(build_group))
+        results[name] = {"min": min(samples), "samples": samples, "build_jobs": build_jobs}
         print(json.dumps({name: results[name]}), flush=True)
 
     print(json.dumps({"summary": {n: r["min"] for n, r in results.items()}}))
