@@ -36,6 +36,7 @@ deployment would need a stamp built from the store's listing instead.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -57,6 +58,7 @@ TABLES = (
 BROADCAST_TABLES = frozenset({"region", "nation"})
 
 _NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+_INFER_NTZ = "spark.sql.parquet.inferTimestampNTZ.enabled"
 
 #: confs that change the inferred schema and that ``load`` does not pin:
 #: the parquet -> Spark type conversions, and whether a directory's part
@@ -96,16 +98,36 @@ def _file_stamp(path: str) -> tuple | None:
         return None
 
 
+@contextmanager
+def _pinned(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` on ``spark`` for the block, then restore each one that
+    changed to its prior value (unset where it had none)."""
+    prior = {k: spark.conf.get(k, None) for k in confs}
+    changed = [k for k, v in confs.items() if prior[k] != v]
+    for k in changed:
+        spark.conf.set(k, confs[k])
+    try:
+        yield
+    finally:
+        for k in changed:
+            if prior[k] is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, prior[k])
+
+
 def _read_parquet(spark: SparkSession, path: str, nanos_as_long: bool) -> DataFrame:
     """``spark.read.parquet(path)``, with the schema from ``_SCHEMAS`` when
-    the path's signature still matches. ``nanos_as_long`` scopes the legacy
-    nanos flag to this read: the plan captures the conf at analysis time, so
-    restoring it immediately keeps OTHER nanos datasets failing loudly
-    instead of silently reading as bigint."""
+    the path's signature still matches. The confs ``load`` pins are scoped
+    to this read: the plan captures them at analysis time, so restoring
+    them at once leaves the caller's session as it was. Naive timestamps
+    infer as TIMESTAMP_LTZ, and the legacy nanos flag stays off for OTHER
+    nanos datasets, which keep failing loudly instead of silently reading
+    as bigint."""
+    confs = {_INFER_NTZ: "false"}
     if nanos_as_long:
-        prior = spark.conf.get(_NANOS_AS_LONG, None)
-        spark.conf.set(_NANOS_AS_LONG, "true")
-    try:
+        confs[_NANOS_AS_LONG] = "true"
+    with _pinned(spark, confs):
         stamp = _file_stamp(path)
         if stamp is None:
             return spark.read.parquet(path)
@@ -117,12 +139,6 @@ def _read_parquet(spark: SparkSession, path: str, nanos_as_long: bool) -> DataFr
         df = spark.read.parquet(path)
         _SCHEMAS[path] = (sig, df.schema)
         return df
-    finally:
-        if nanos_as_long:
-            if prior is None:
-                spark.conf.unset(_NANOS_AS_LONG)
-            else:
-                spark.conf.set(_NANOS_AS_LONG, prior)
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -135,12 +151,11 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    # The testdata stores naive timestamps (isAdjustedToUTC=false). Read them
-    # as TIMESTAMP_LTZ (identical values under the UTC session zone the engine
-    # pins) rather than TIMESTAMP_NTZ so epoch functions (unix_micros etc.)
-    # work. Set here, not only in the session factory, because the driver
-    # calls queries() with its own plain SparkSession.
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    # The testdata stores naive timestamps (isAdjustedToUTC=false); the read
+    # types them TIMESTAMP_LTZ (identical values under the UTC session zone
+    # the engine pins) rather than TIMESTAMP_NTZ so epoch functions
+    # (unix_micros etc.) work. Pinned per read, not only in the session
+    # factory, because a caller of queries() may pass its own plain session.
     df = _read_parquet(spark, table_path(sf_dir, name), nanos_as_long=name == "events")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         from pyspark.sql import functions as F

@@ -2276,9 +2276,8 @@ def q147(spark: SparkSession, sf: str) -> DataFrame:
     "stored-value passthrough. Complements q68 (latest-per-key event "
     "compaction) and q129 (SCD2 history): this is the SNAPSHOT writer. "
     "100 TB: one co-partitioned full-outer shuffle on the key; store the "
-    "snapshot bucketed by key (sources/batch.write_table bucketBy) and "
-    "the snapshot side of the MERGE never shuffles at all "
-    "(test_bucketed_join_skips_shuffle pins that layout)",
+    "snapshot bucketed by key (DataFrameWriter.bucketBy) and the "
+    "snapshot side of the MERGE never shuffles at all",
     tags=("B5", "B25"),
 )
 def q148(spark: SparkSession, sf: str) -> DataFrame:

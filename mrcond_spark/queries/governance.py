@@ -30,8 +30,8 @@ from ..operators import text
 from . import register
 from .llm import PLANT_OFFSET, plant_duplicates
 
-#: split definition lives in operators/splits.py (re-exported through
-#: mrcond_spark.functions); the oracles restate it via sql_split.
+#: split definition lives in operators/splits.py; the oracles restate it
+#: via sql_split.
 from ..operators.splits import TRAIN_PCT, VAL_PCT, split_assignment
 from ..operators.splits import sql_split as _sql_split
 

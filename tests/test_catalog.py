@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import itertools
 import os
+import shutil
 from contextlib import contextmanager
 
 import pyarrow as pa
@@ -21,6 +22,7 @@ from mrcond_spark.queries import all_queries
 NANOS = "spark.sql.legacy.parquet.nanosAsLong"
 BINARY_AS_STRING = "spark.sql.parquet.binaryAsString"
 MERGE_SCHEMA = "spark.sql.parquet.mergeSchema"
+INFER_NTZ = "spark.sql.parquet.inferTimestampNTZ.enabled"
 
 _groups = itertools.count()
 
@@ -195,6 +197,25 @@ def test_events_ts_is_a_timestamp_on_a_hit_and_nanos_flag_is_restored(
             spark.conf.unset(NANOS)
         else:
             spark.conf.set(NANOS, saved)
+
+
+def test_load_leaves_the_sessions_timestamp_inference_alone(spark, sf_dir, tmp_path):
+    """``load`` reads naive timestamps as ``timestamp`` but leaves the
+    caller's ``inferTimestampNTZ`` as it found it, on a miss and on a hit,
+    so the caller's own later parquet reads still infer ``timestamp_ntz``."""
+    path = tmp_path / "events.parquet"
+    shutil.copyfile(table_path(sf_dir, "events"), path)
+    session = spark.newSession()
+    session.conf.set(INFER_NTZ, "true")
+    miss = load(session, str(tmp_path), "events")
+    assert session.conf.get(INFER_NTZ) == "true"
+    with jobs_run(session) as jobs:
+        hit = load(session, str(tmp_path), "events")
+    assert jobs == []
+    assert session.conf.get(INFER_NTZ) == "true"
+    assert dict(miss.dtypes)["ts"] == dict(hit.dtypes)["ts"] == "timestamp"
+    assert hit.collect() == miss.collect() == load(spark, sf_dir, "events").collect()
+    assert dict(session.read.parquet(str(path)).dtypes)["ts"] == "timestamp_ntz"
 
 
 RELATIONAL = sorted(n for n in all_queries() if int(n[1:].split("_", 1)[0]) <= 33)

@@ -128,9 +128,8 @@ def test_bench_summary_line_fits_driver_tail_window():
         ), "query-number keys must stay unique"
         for i in range(n_phantom):
             timings[f"q{900 + i}_phantom"] = 9.9
-        # worst-case streaming adornments too: all four figures
-        # storm-retried to max attempts AND flagged slow, with the
-        # load annotation active at worst-case repr ("sload" + "sdef")
+        # worst-case streaming adornments too: every figure at 6 digits
+        # and the attempt counts on the line
         return build_summary_line(
             timings,
             99999.999,
@@ -141,19 +140,6 @@ def test_bench_summary_line_fits_driver_tail_window():
             99999.9,
             99999.9,
             stream_attempts={"cdc": 9, "win": 9, "ses": 9, "ssj": 9},
-            stream_low={
-                "cdc": [9.9, 9.9],
-                "win": [9.9, 9.9],
-                "ses": [9.9, 9.9],
-                "ssj": [9.9, 9.9],
-            },
-            stream_loads={
-                "cdc": [99.99],
-                "win": [99.99],
-                "ses": [99.99],
-                "ssj": [99.99],
-            },
-            stream_defer_spent_s=999.9,
         )
 
     for n_phantom in (0, 20, 60):

@@ -57,6 +57,10 @@ if DRIVER_MEM:
     builder = builder.config("spark.driver.memory", DRIVER_MEM)
 spark = builder.getOrCreate()
 spark.sparkContext.setLogLevel("ERROR")
+# catalog.load pins its parquet inference confs per read: this plain
+# session must come out of the corpus with the value it went in with
+NTZ = "spark.sql.parquet.inferTimestampNTZ.enabled"
+ntz_before = spark.conf.get(NTZ)
 
 import __spark_entry__ as E
 
@@ -160,4 +164,7 @@ for name, fn in sorted(qs.items()):
         fails.append(name)
 if oracle_skips:
     print(f"ORACLE-SKIPS ({len(oracle_skips)}, wall cap {ORACLE_TIMEOUT}s): {oracle_skips}")
+if spark.conf.get(NTZ) != ntz_before:
+    print(f"FAIL session conf {NTZ}: {ntz_before!r} -> {spark.conf.get(NTZ)!r}")
+    fails.append(NTZ)
 print("RESULT:", "ALL GREEN" if not fails else f"FAILURES: {fails}")

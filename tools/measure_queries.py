@@ -11,7 +11,6 @@ before execution, counted through a job group.
 Usage:
   python tools/measure_queries.py q132_kcore q170_dedup_components
   python tools/measure_queries.py --plans plans/r11 --suffix before q132_kcore
-  python tools/measure_queries.py --runs 3 --sf /root/testdata/sf0.1 all-top20
 """
 
 from __future__ import annotations
@@ -49,9 +48,6 @@ def main() -> None:
     spark = get_spark("measure", cpus=args.cpus, shuffle_partitions=max(args.cpus, 32))
     queries = all_queries()
     names = list(args.names)
-    if names == ["all-top20"]:
-        exp = json.load(open(os.path.join(os.path.dirname(__file__), "..", "bench_expected.json")))
-        names = [n for n, _ in sorted(exp.items(), key=lambda x: -x[1])[:20]]
 
     # warm the JVM / python workers the same way bench.py does
     queries["q54_embedding_near_dup"].spark(spark, args.sf).write.format("noop").mode(
