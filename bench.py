@@ -171,17 +171,17 @@ def bench_streaming(spark, n_events: int = 20000) -> float:
                     )
         name = f"bench-{uuid.uuid4().hex[:8]}"
         pub = MemoryPublisher.named(name)
-        with _sized_stream_parts(spark, n_events // 4):
-            t0 = time.perf_counter()
-            cq = start_cdc_query(
-                file_replay_stream(spark, events_dir, max_files_per_trigger=1),
-                pub,
-                name,
-                os.path.join(tmp, "ckpt"),
-                available_now=True,
-            )
-            cq.query.awaitTermination(300)
-            elapsed = time.perf_counter() - t0
+        # the drain runs no shuffle, so no partition sizing applies here
+        t0 = time.perf_counter()
+        cq = start_cdc_query(
+            file_replay_stream(spark, events_dir, max_files_per_trigger=1),
+            pub,
+            name,
+            os.path.join(tmp, "ckpt"),
+            available_now=True,
+        )
+        cq.query.awaitTermination(300)
+        elapsed = time.perf_counter() - t0
         delivered = len(pub.messages[name])
         MemoryPublisher.reset(name)
         return round(delivered / elapsed, 1) if elapsed > 0 else 0.0

@@ -3,8 +3,16 @@
 One checkpointed streaming query per watched collection:
 
     source (change stream / file replay)
-      -> foreachBatch: sort by resume token, to_json(struct(*)), publish
+      -> to_json(struct(*)) payload projection, built once per query
+      -> foreachBatch: one Spark job drains the batch to Arrow; the driver
+         sorts it by resume token and publishes
       -> checkpoint commit (R2/R6: replaces the resume-token store)
+
+Token order is restored in Arrow on the driver, not by a Spark sort: a
+global ``orderBy`` would add a range exchange (a second job under AQE, and
+a sampling job once shuffle partitions exceed 1) to every micro-batch.
+Arrow's sort is stable and compares UTF-8 bytes, nulls first, which is
+Spark's ``UTF8_BINARY`` ascending order.
 
 Terminal handling (R7): a ``drop``/``invalidate`` event in a batch is
 published (the reference forwards every event the cursor yields,
@@ -21,7 +29,9 @@ from __future__ import annotations
 import threading
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, functions as F
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from .envelope import TERMINAL_OPERATIONS, to_payload
@@ -55,30 +65,28 @@ def start_cdc_query(
     """
     publisher.declare(stream_name)
     terminal = threading.Event()
+    terminal_ops = pa.array(TERMINAL_OPERATIONS)
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        # ONE job per micro-batch: token + payload + operationType drained
-        # together (sorted by resume token for the ordering contract), so
-        # terminal detection costs nothing extra on the hot path. Arrow
-        # toPandas beats a pickled-Row collect ~2x on the driver-side drain —
-        # the drain is the serial section of the queue contract, so its
-        # constant factor IS the throughput ceiling per queue: measured
-        # 9.5k-14.1k ev/s single-queue (PERF.md "Per-queue CDC publish
-        # ceiling" — the one intentional driver-side data path; scale axis
-        # is per-collection fan-out, R8, per the reference's per-queue
-        # ordering contract e2e.rs:413).
-        pdf = to_payload(batch_df, include_operation=True).orderBy(F.col("_token")).toPandas()
-        if len(pdf):
+        # The drain is the serial section of the per-queue ordering contract
+        # (e2e.rs:413), so its fixed cost per micro-batch is the queue's
+        # throughput ceiling (PERF.md "Per-queue CDC publish ceiling"): one
+        # job with no shuffle brings token, payload and operationType to the
+        # driver as Arrow, which sorts there and detects terminal events
+        # without a second pass.
+        batch = batch_df.toArrow().sort_by([("_token", "ascending")], null_placement="at_start")
+        if batch.num_rows:
             try:
-                publisher.publish_batch(stream_name, pdf["value"].tolist())
+                publisher.publish_batch(stream_name, batch["value"].to_pylist())
             except Exception as e:
                 # tag sink-origin failures for supervisor classification
                 raise RuntimeError(f"SINK_ERROR[{stream_name}]: {e}") from e
-            if pdf["__op"].isin(list(TERMINAL_OPERATIONS)).any():
+            if pc.any(pc.is_in(batch["__op"], value_set=terminal_ops)).as_py():
                 terminal.set()
 
     writer = (
-        source_df.writeStream.foreachBatch(handle)
+        to_payload(source_df, include_operation=True)
+        .writeStream.foreachBatch(handle)
         .option("checkpointLocation", checkpoint_dir)
         .queryName(stream_name)
     )

@@ -43,10 +43,9 @@ import math
 #: scales with input rows, while sub-second availableNow drains are
 #: fixed-overhead-bound — partitions beyond the plateau only multiply
 #: store open/commit/snapshot costs, and a single partition forfeits cheap
-#: task parallelism. The CDC drain path (driver-side serial) measured the
-#: other way: 1 partition best-of 14.2k ev/s vs 12.9k at 4 (overlapping
-#: spreads), so no blanket floor is warranted either. The constant
-#: therefore stays a MEMORY GUARDRAIL, exact only near its 100k anchor:
+#: task parallelism. The CDC drain (``pipeline.start_cdc_query``) runs no
+#: shuffle, so this count does not reach it. The constant therefore stays
+#: a MEMORY GUARDRAIL, exact only near its 100k anchor:
 #: for join/dedup state (where input rows DO land in the store) keep the
 #: rows-linear rule; for low-cardinality aggregations pass
 #: ``max_parts~=8`` (the measured plateau) — partitions above it buy

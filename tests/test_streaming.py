@@ -21,7 +21,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from mrcond_spark.streaming import windows
+from mrcond_spark.streaming.envelope import to_payload
 from mrcond_spark.streaming.metrics import Metrics
+from mrcond_spark.streaming.pipeline import start_cdc_query
 from mrcond_spark.streaming.sink import MemoryPublisher
 from mrcond_spark.streaming.source import file_replay_stream
 from mrcond_spark.streaming.supervisor import ConnectorServer, StreamSpec, classify_error
@@ -190,6 +192,95 @@ def test_mid_batch_failure_at_least_once_duplicates(spark, tmp_path):
             seen.add(k)
             unique.append(d)
     assert unique == DOCS
+
+
+def published_tokens(pub: MemoryPublisher, stream: str) -> list:
+    return [json.loads(p).get("_id") for p in pub.messages[stream]]
+
+
+def test_drain_orders_a_multi_file_batch_by_token(spark, tmp_path):
+    """One micro-batch over two files whose tokens interleave and run
+    backwards, plus a malformed line (null token): payloads come out in
+    ascending token order with the null-token payload first — the order a
+    Spark ``orderBy`` on the token (UTF8_BINARY, nulls first) gives."""
+    name = f"ord-{uuid.uuid4().hex[:8]}"
+    events_dir = str(tmp_path / "ord-events")
+    write_envelope_file(events_dir, "a.json", [insert_event(i, {"i": i}) for i in (9, 7, 5, 3, 1)])
+    with open(os.path.join(events_dir, "b.json"), "w") as f:
+        for i in (8, 6, 4):
+            f.write(json.dumps(insert_event(i, {"i": i})) + "\n")
+        f.write("{not json\n")
+        for i in (2, 0):
+            f.write(json.dumps(insert_event(i, {"i": i})) + "\n")
+
+    pub = MemoryPublisher.named(name)
+    cq = start_cdc_query(
+        file_replay_stream(spark, events_dir, max_files_per_trigger=2),
+        pub, name, str(tmp_path / "ord-ckpt"), available_now=True,
+    )
+    cq.query.awaitTermination(120)
+
+    assert len([p for p in cq.query.recentProgress if p.numInputRows]) == 1
+    assert published_tokens(pub, name) == [None] + [f"{i:08d}" for i in range(10)]
+    MemoryPublisher.reset(name)
+
+
+def test_drain_runs_one_job_and_no_shuffle_per_batch(spark, tmp_path):
+    """Each drain micro-batch is one Spark job of one stage that writes no
+    shuffle bytes, counted on the query's run-id job group."""
+    name = f"jobs-{uuid.uuid4().hex[:8]}"
+    events_dir = str(tmp_path / "jobs-events")
+    for f in range(3):
+        write_envelope_file(events_dir, f"b{f}.json",
+                            [insert_event(10 * f + i, {"n": i}) for i in range(10)])
+    pub = MemoryPublisher.named(name)
+    cq = start_cdc_query(file_replay_stream(spark, events_dir), pub, name,
+                         str(tmp_path / "jobs-ckpt"), available_now=True)
+    cq.query.awaitTermination(120)
+    assert len(pub.messages[name]) == 30
+
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job and stage ends reach the store
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    jobs = tracker.getJobIdsForGroup(cq.query.runId)
+    stages = [s for j in jobs for s in tracker.getJobInfo(j).stageIds]
+    assert len([p for p in cq.query.recentProgress if p.numInputRows]) == 3
+    assert (len(jobs), len(stages)) == (3, 3)
+    assert sum(store.lastStageAttempt(s).shuffleWriteBytes() for s in stages) == 0
+    MemoryPublisher.reset(name)
+
+
+def test_resume_across_the_drain_plan_change(spark, tmp_path):
+    """A checkpoint committed by a query that projected and sorted inside
+    foreachBatch resumes under ``start_cdc_query``, which projects before
+    ``writeStream``: only the uncommitted remainder is delivered, in token
+    order (at-least-once across the plan change)."""
+    name = f"up-{uuid.uuid4().hex[:8]}"
+    events_dir, ckpt = str(tmp_path / "up-events"), str(tmp_path / "up-ckpt")
+    pub = MemoryPublisher.named(name)
+    write_envelope_file(events_dir, "b0.json", [insert_event(i, {"i": i}) for i in (1, 0)])
+
+    def project_in_batch(batch_df, epoch_id):
+        pdf = to_payload(batch_df, include_operation=True).orderBy("_token").toPandas()
+        pub.publish_batch(name, pdf["value"].tolist())
+
+    q = (
+        file_replay_stream(spark, events_dir).writeStream.foreachBatch(project_in_batch)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert published_tokens(pub, name) == ["00000000", "00000001"]
+
+    write_envelope_file(events_dir, "b1.json", [insert_event(i, {"i": i}) for i in (4, 2, 3)])
+    write_envelope_file(events_dir, "b2.json", [insert_event(i, {"i": i}) for i in (6, 5)])
+    cq = start_cdc_query(file_replay_stream(spark, events_dir), pub, name, ckpt,
+                         available_now=True)
+    cq.query.awaitTermination(120)
+
+    assert published_tokens(pub, name) == [f"{i:08d}" for i in range(7)]
+    MemoryPublisher.reset(name)
 
 
 def test_classify_error_table():
