@@ -38,11 +38,35 @@ Design notes (100 TB scale):
   executor would need the jar on its classpath as well. The settings take
   effect only when ``get_spark`` starts the JVM: a session it takes from a
   JVM that was already running keeps the stock classes.
+- Tungsten pages and broadcast blocks are sized from the driver heap
+  (``collectable_buffer_size``), so that neither is a G1 humongous object.
+  G1 picks a 4 MB region for the default 8g heap, and any object over half
+  a region is humongous: it is zeroed, placed straight in the old
+  generation, and its allocation may start a concurrent cycle. Spark's own
+  page for that heap on 4 cores is 64 MB less 16 B, so every page a hash
+  aggregate (``BytesToBytesMap``) or a sort (``UnsafeExternalSorter``, e.g.
+  under the session window's ``MergingSessionsExec``) took was such a
+  ``long[]``: a GC log of a session-window pass showed a concurrent mark
+  cycle every 20-250 ms. Every broadcast, each stage's task binary
+  included, starts with one ``spark.broadcast.blockSize`` chunk, a 4 MB
+  ``byte[]`` by default, however small its content. Both are set to a
+  quarter of the region G1 picks for the heap, so the array with its 16 B
+  header stays under half a region, and up to a 64 GB heap the 8,192 pages
+  of a task's page table still cover the whole heap. Like the file systems
+  above, the settings take effect only when ``get_spark`` starts the JVM:
+  they are derived from the heap ``get_spark`` asks for, a session taken
+  from a running JVM keeps the sizes it started with, and plain sessions
+  keep Spark's defaults. Off-heap Tungsten memory would also keep pages out
+  of the G1 heap, but needs a ``spark.memory.offHeap.size`` budget the
+  engine does not have. Pinning ``-XX:G1HeapRegionSize`` instead is out of
+  reach too: callers such as the benchmark set their own
+  ``spark.driver.extraJavaOptions``, which would replace it.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -52,6 +76,22 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 #: the engine's fork-free local file systems (see the design notes)
 FS_JAR = os.path.join(_PACKAGE_PARENT, "mrcond_spark", "jvm", "mrcond-spark-fs.jar")
+
+_MEM_UNITS = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+
+
+def collectable_buffer_size(driver_memory: str) -> str:
+    """Tungsten page and broadcast block size for a driver heap given as
+    Spark writes ``spark.driver.memory`` (``8g``, ``4096m``; a bare number is
+    MiB): a quarter of the G1 region that JDK 17 picks for that heap, which
+    is heap/2048 rounded up to a power of two and clamped to 1-32 MB."""
+    m = re.fullmatch(r"(\d+)([kmgt]?)b?", driver_memory.strip().lower())
+    if not m:
+        raise ValueError(f"unreadable spark.driver.memory: {driver_memory!r}")
+    heap = int(m.group(1)) * _MEM_UNITS[m.group(2) or "m"]
+    region = 1 << max(heap // 2048 - 1, 0).bit_length()
+    page_kb = min(max(region, 1 << 20), 32 << 20) // 4 >> 10
+    return f"{page_kb >> 10}m" if page_kb % 1024 == 0 else f"{page_kb}k"
 
 
 def get_spark(
@@ -111,9 +151,13 @@ def get_spark(
         .config("spark.sql.codegen.cache.maxEntries", "4000")
         # --- quieter driver ---
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    conf = dict(extra_conf or {})
+    conf = {"spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")}
+    conf.update(extra_conf or {})
+    # --- pages and broadcast blocks below G1's humongous threshold ---
+    buffer_size = collectable_buffer_size(conf["spark.driver.memory"])
+    conf.setdefault("spark.buffer.pageSize", buffer_size)
+    conf.setdefault("spark.broadcast.blockSize", buffer_size)
     class_path = conf.pop("spark.driver.extraClassPath", None)
     builder = builder.config(
         "spark.driver.extraClassPath", os.pathsep.join(filter(None, [FS_JAR, class_path]))

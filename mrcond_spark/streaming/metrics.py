@@ -11,13 +11,19 @@ The five series mirror the reference's Prometheus metrics
 - engine_failures_total                   counter, labels: collection, error_type
 
 Hand-rolled registry (no client-lib dependency) with Prometheus text
-exposition (`metrics.rs:206-212` equivalent).
+exposition (`metrics.rs:206-212` equivalent). Label values are escaped as
+the text format requires: a MongoDB collection name may hold ``"`` or ``\\``.
 """
 
 from __future__ import annotations
 
 import threading
 from collections import defaultdict
+
+
+def _label(value: str) -> str:
+    """A label value escaped for the Prometheus text format."""
+    return value.replace("\\", "\\\\").replace('"', '\\"').replace("\n", "\\n")
 
 
 class Metrics:
@@ -60,13 +66,19 @@ class Metrics:
                 "# TYPE engine_collection_running_servers gauge",
             ]
             for coll, n in sorted(self.collection_running.items()):
-                lines.append(f'engine_collection_running_servers{{collection="{coll}"}} {n}')
+                lines.append(
+                    f'engine_collection_running_servers{{collection="{_label(coll)}"}} {n}'
+                )
             lines.append("# TYPE engine_server_restarts_total counter")
             for (coll, reason), n in sorted(self.restarts.items()):
                 lines.append(
-                    f'engine_server_restarts_total{{collection="{coll}",reason="{reason}"}} {n}'
+                    f'engine_server_restarts_total{{collection="{_label(coll)}",'
+                    f'reason="{_label(reason)}"}} {n}'
                 )
             lines.append("# TYPE engine_failures_total counter")
             for (coll, et), n in sorted(self.failures.items()):
-                lines.append(f'engine_failures_total{{collection="{coll}",error_type="{et}"}} {n}')
+                lines.append(
+                    f'engine_failures_total{{collection="{_label(coll)}",'
+                    f'error_type="{_label(et)}"}} {n}'
+                )
             return "\n".join(lines) + "\n"

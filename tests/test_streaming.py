@@ -316,6 +316,22 @@ def test_metrics_export_and_http():
         srv.shutdown()
 
 
+def test_metrics_export_escapes_label_values():
+    # MongoDB allows '"' in a collection name; the text format needs \\, \" and \n
+    m = Metrics()
+    m.record_server_started('a"b\\c')
+    m.record_restart('a"b\\c', "sink")
+    m.record_failure('a"b\\c', "line\nbreak")
+    text = m.export()
+    coll = 'collection="a\\"b\\\\c"'
+    for series in (
+        f"engine_collection_running_servers{{{coll}}} 1",
+        f'engine_server_restarts_total{{{coll},reason="sink"}} 1',
+        f'engine_failures_total{{{coll},error_type="line\\nbreak"}} 1',
+    ):
+        assert series in text.splitlines()
+
+
 # ---------------------------------------------------------------------------
 # Event-time operators (S5-S12) over deterministic replay
 # ---------------------------------------------------------------------------

@@ -5,13 +5,18 @@
 Runs, in one engine session, the perfbench ``analytics`` workload (seed 21:
 its checked first pass, one warm pass, then 3 measured passes) and then the
 ``stream`` workload's drain and session phases (one warm pass, then 3
-measured passes). For each measured pass it prints the CPU seconds of four
+measured passes). For each measured pass it prints the CPU seconds of five
 parts of the process tree, and how many processes and threads the host
-started:
+started, on one row for the analytics pass and one row for each of the
+stream's two phases:
 
 - ``driver_py``: this process, the driver's Python side (plan construction,
   Py4J, the stream's ``foreachBatch`` drain);
-- ``jvm``: the Spark JVM's own threads less its JIT compiler threads;
+- ``jvm``: the Spark JVM's own threads less its JIT compiler threads and
+  its garbage collector's;
+- ``jvm_gc``: the JVM's garbage-collector threads (``GC Thread#*``,
+  ``G1 Conc#*``, ``G1 Main Marker``, ``G1 Refine#*``, ``G1 Service``) and
+  its ``VM Thread``, which runs the collection pauses;
 - ``spawned``: the processes the JVM started and has reaped (e.g. a shell
   ``chmod``);
 - ``workers``: the Python worker daemon and every worker it forked, exited
@@ -21,9 +26,10 @@ started:
 
 As in the benchmark, a full GC runs before each phase (the analytics pass,
 the stream's drain and its session run), outside the measured window. The
-four CPU parts sum to the pass's CPU; for ``stream`` the window also holds
-each phase's delivery check, which the benchmark's ``pass_cpu_s`` leaves
-out. The last line of each workload has the median of each column.
+five CPU parts sum to the phase's CPU; a stream phase's window also holds
+its delivery check, which the benchmark's ``pass_cpu_s`` leaves out. After
+the passes, one line per row (``analytics``, ``stream.drain``,
+``stream.session``) has the median of each column.
 Run it from the root of a checkout: it uses that checkout's engine and
 benchmark modules and writes under ``.perfbench/``.
 """
@@ -48,6 +54,8 @@ from stream import StreamWorkload  # noqa: E402
 
 SEED = 21
 PASSES = 3
+#: the JVM's collector threads, as /proc cuts their names to 15 characters
+GC_THREADS = ("GC Thread#", "G1 Conc#", "G1 Main Marker", "G1 Refine#", "G1 Service", "VM Thread")
 
 
 def _daemon_pid(jvm_pid: int) -> int | None:
@@ -68,39 +76,56 @@ def _host_forks() -> int:
         return next(int(line.split()[1]) for line in f if line.startswith("processes "))
 
 
+def _gc_cpu_s(jvm_pid: int) -> float:
+    ticks = 0
+    for tid in os.listdir(f"/proc/{jvm_pid}/task"):
+        try:
+            with open(f"/proc/{jvm_pid}/task/{tid}/comm") as f:
+                if not f.read().startswith(GC_THREADS):
+                    continue
+            stat = host._stat_fields(f"/proc/{jvm_pid}/task/{tid}/stat")
+            ticks += int(stat[11]) + int(stat[12])
+        except OSError:
+            pass
+    return ticks / os.sysconf("SC_CLK_TCK")
+
+
 def split(jvm_pid: int) -> dict[str, float]:
     daemon = _daemon_pid(jvm_pid)
     jvm = host.tree_cpu_s(jvm_pid)
+    jvm_gc = _gc_cpu_s(jvm_pid)
     workers = host.tree_cpu_s(daemon) if daemon else 0.0
     reaped = host._stat_fields(f"/proc/{jvm_pid}/stat")[13:15]
     spawned = sum(int(x) for x in reaped) / os.sysconf("SC_CLK_TCK")
     return {
         "driver_py": host.tree_cpu_s() - jvm,
-        "jvm": jvm - workers - spawned,
+        "jvm": jvm - jvm_gc - workers - spawned,
+        "jvm_gc": jvm_gc,
         "spawned": spawned,
         "workers": workers,
         "forks": _host_forks(),
     }
 
 
-def measure(spark, jvm_pid: int, name: str, phases) -> None:
-    """Prints the split of ``PASSES`` passes, each running every callable in
-    ``phases`` after a full GC outside its window, and their median."""
-    passes = []
+def measure(spark, jvm_pid: int, phases: dict) -> None:
+    """Prints the split of every phase in each of ``PASSES`` passes, a pass
+    running each callable in ``phases`` after a full GC outside its window,
+    and then each phase's median."""
+    rows: dict[str, list[dict[str, float]]] = {name: [] for name in phases}
     for _ in range(PASSES):
-        one: dict[str, float] = {}
-        for phase in phases:
+        for name, phase in phases.items():
             host.jvm_full_gc(spark)
             before = split(jvm_pid)
             phase()
             after = split(jvm_pid)
-            for k in after:
-                one[k] = one.get(k, 0) + after[k] - before[k]
-        one["total"] = sum(v for k, v in one.items() if k != "forks")
-        passes.append(one)
-        print(json.dumps({k: round(v, 3) for k, v in one.items()}), file=sys.stderr)
-    median = {k: round(statistics.median(p[k] for p in passes), 3) for k in passes[0]}
-    print(json.dumps({"workload": name, "seed": SEED, "median": median}))
+            one = {k: after[k] - before[k] for k in after}
+            one["total"] = sum(v for k, v in one.items() if k != "forks")
+            rows[name].append(one)
+            print(json.dumps({"phase": name, **{k: round(v, 3) for k, v in one.items()}}),
+                  file=sys.stderr)
+    for name, passes in rows.items():
+        median = {k: round(statistics.median(p[k] for p in passes), 3) for k in passes[0]}
+        print(json.dumps({"workload": name, "seed": SEED, "median": median}))
 
 
 def main() -> None:
@@ -119,12 +144,12 @@ def main() -> None:
         batch = BatchWorkload(spark, tables)
         batch.check_pass()
         batch.timed(0)
-        measure(spark, jvm_pid, "analytics", [lambda: [batch.run_query(q) for q in batch.queries]])
+        measure(spark, jvm_pid, {"analytics": lambda: [batch.run_query(q) for q in batch.queries]})
 
         stream = StreamWorkload(spark, os.path.join(run_dir, "stream"), SEED)
         stream.drain()
         stream.session()
-        measure(spark, jvm_pid, "stream", [stream.drain, stream.session])
+        measure(spark, jvm_pid, {"stream.drain": stream.drain, "stream.session": stream.session})
         print(json.dumps({"failed": batch.failed + stream.failed,
                           "failures": batch.failures + stream.failures}))
     finally:
