@@ -421,9 +421,10 @@ def main() -> None:
     # Streaming before the corpus. The first replay pays one-time
     # stream-planning, state-store and Python-worker costs that a
     # long-running CDC daemon never re-pays, so each figure warms with a
-    # replay first and reports the best of its timed runs. The cdc warm-up
-    # is one replay of the timed size: after a 2,000-event one the first
-    # timed sample ran 35-40% below the best.
+    # replay first and reports the best of its timed runs. Each warm-up is
+    # one replay of the timed size: after shorter ones the timed samples
+    # still climbed (cdc's first ran 35-40% below its best after a
+    # 2,000-event warm-up; win and ses kept rising after 10,000 events).
     stream_errors: dict[str, str] = {}
     stream_attempts: dict[str, int] = {}
     cdc_eps = stream_figure(
@@ -438,7 +439,7 @@ def main() -> None:
     win_eps = stream_figure(
         "win",
         "_windowed_stream",
-        lambda: bench_windowed_stream(spark, n_events=10_000),
+        lambda: bench_windowed_stream(spark),
         lambda: bench_windowed_stream(spark),
         2,
         stream_attempts,
@@ -447,7 +448,7 @@ def main() -> None:
     sess_eps = stream_figure(
         "ses",
         "_session_stream",
-        lambda: bench_session_stream(spark, n_events=10_000),
+        lambda: bench_session_stream(spark),
         lambda: bench_session_stream(spark),
         2,
         stream_attempts,
@@ -456,7 +457,7 @@ def main() -> None:
     ssj_eps = stream_figure(
         "ssj",
         "_stream_stream_join",
-        lambda: bench_stream_stream_join(spark, n_events_per_side=5_000),
+        lambda: bench_stream_stream_join(spark),
         lambda: bench_stream_stream_join(spark),
         2,
         stream_attempts,

@@ -46,25 +46,39 @@ def seeded_hash60(prefix: str, col: Column) -> Column:
     return hex60(seeded_md5(prefix, col))
 
 
-def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame:
-    """Repartition ONLY if the plan has fewer partitions than the cluster.
+#: Estimated input bytes per partition that ``ensure_parallelism`` spreads to.
+SPREAD_BYTES = 128 * 1024
 
-    Heavy per-row stages (Pandas-UDF hashing, featurization) inherit the
-    scan's partitioning; a small local parquet file reads as ONE split, which
-    would serialize the whole stage on one core. At real scale inputs have
-    many splits and this is a no-op — the guard keeps us from injecting a
-    gratuitous shuffle into big plans.
 
-    COST CAVEAT (round-11 verdict residual 6): ``df.rdd.getNumPartitions()``
-    compiles the plan to an RDD to read its partition count — driver-side
-    planning work per call (and a real job if the plan holds an AQE-staged
-    exchange). Fine at the current call sites (once per operator build,
-    directly over a scan or checkpoint); never call it inside a loop or on
-    a deep unmaterialized plan.
+def ensure_parallelism(df: DataFrame) -> DataFrame:
+    """Spread a heavy stage's input over ``min(cores, ceil(bytes /
+    SPREAD_BYTES))`` partitions when it arrives in fewer.
+
+    Heavy per-row stages (Arrow-UDF shingling and hashing, featurization)
+    inherit the scan's partitioning, and a small local parquet file reads as
+    one split. ``bytes`` is Catalyst's ``sizeInBytes`` for the input: the
+    on-disk size over a parquet scan (scaled by any projection), the
+    checkpointed plan's estimate over a checkpoint, and
+    ``spark.sql.defaultSizeInBytes`` where Catalyst cannot tell (an
+    RDD-backed frame), so such an input always spreads. Reading it runs no
+    job.
+
+    The round-robin exchange costs a shuffle, a stage and one task per core
+    downstream, which breaks even in wall at about half a MiB. q88 on 4
+    cores, spread vs none, wall (CPU of the JVM and Python workers): a 61
+    KiB ``documents`` 0.86 vs 0.64 s (2.1 vs 1.3 s), 581 KiB 1.26 vs 1.28 s
+    (3.5 vs 2.0 s), 5.6 MiB 6.1 vs 12.9 s (20.6 vs 19.1 s). At 128 KiB a
+    partition, inputs from 512 KiB keep a 4-way spread.
+
+    At a target of 1 the input comes back untouched, without compiling it to
+    an RDD. Otherwise ``df.rdd.getNumPartitions()`` compiles the plan (and
+    runs its exchange stages under AQE), so call this over a scan or a
+    checkpoint, never inside a loop. At real scale inputs arrive in many
+    splits and nothing is added.
     """
-    sc = df.sparkSession.sparkContext
-    target = min_parts or sc.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    target = min(df.sparkSession.sparkContext.defaultParallelism, -(-size // SPREAD_BYTES))
+    if target > 1 and df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
 

@@ -1108,12 +1108,12 @@ def q87(spark: SparkSession, sf: str) -> DataFrame:
 def q88(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators import ensure_parallelism, materialize_once
 
-    # ensure_parallelism: the q118 single-split hazard at a second site
-    # (round-11 sf1 sweep finding) — the tiled documents parquet reads as 2
-    # splits, so the Arrow shingle UDF + 2.7M-row gram explode ran on 2
-    # cores AND the checkpoint froze that layout for both downstream
-    # branches: 28.1 s at sf1. At real scale inputs have many splits and
-    # the guard is a no-op.
+    # the shingle UDF and gram explode inherit the scan's splits, and the
+    # checkpoint freezes that layout for both branches: a documents file
+    # that reads as 1-2 splits spreads over one partition per 128 KiB
+    # (SPREAD_BYTES). On 4 cores the spread halves wall at 5.6 MiB (12.9
+    # -> 6.1 s), ties at 581 KiB and loses at 61 KiB (0.64 -> 0.86 s),
+    # where q88 now builds with no job and no exchange.
     d = ensure_parallelism(load(spark, sf, "documents"))
     # the bench and corpus branches both consume the shingle projection —
     # unmaterialized, the full-corpus Arrow shingle UDF (the plan's most

@@ -1,7 +1,9 @@
 from __future__ import annotations
 
+import itertools
 import os
 import sys
+from contextlib import contextmanager
 
 import duckdb
 import pytest
@@ -39,3 +41,28 @@ def duck():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{table_path(SF_DIR, t)}'")
     yield con
     con.close()
+
+
+_groups = itertools.count()
+
+
+@contextmanager
+def _jobs_run(spark):
+    sc = spark.sparkContext
+    group = f"test-jobs-{next(_groups)}"
+    ids: list[int] = []
+    sc.setJobGroup(group, group)
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        # job-start events reach the status store through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="session")
+def jobs_run():
+    """``with jobs_run(spark) as jobs:`` -- after the block, ``jobs`` holds
+    the ids of the Spark jobs the block's thread launched."""
+    return _jobs_run

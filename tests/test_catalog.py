@@ -1,13 +1,11 @@
 """Schema-pinned ``catalog.load``: a repeat load reads the cached schema and
 runs no Spark job; a change to the files or to a schema-conversion conf
-re-infers. Jobs are counted with a job group per call."""
+re-infers. Jobs are counted with a job group per call (``jobs_run``)."""
 
 from __future__ import annotations
 
-import itertools
 import os
 import shutil
-from contextlib import contextmanager
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -23,25 +21,6 @@ NANOS = "spark.sql.legacy.parquet.nanosAsLong"
 BINARY_AS_STRING = "spark.sql.parquet.binaryAsString"
 MERGE_SCHEMA = "spark.sql.parquet.mergeSchema"
 INFER_NTZ = "spark.sql.parquet.inferTimestampNTZ.enabled"
-
-_groups = itertools.count()
-
-
-@contextmanager
-def jobs_run(spark):
-    """Yield a list that holds, after the block, the ids of the Spark jobs
-    the block's thread launched."""
-    sc = spark.sparkContext
-    group = f"test-catalog-{next(_groups)}"
-    ids: list[int] = []
-    sc.setJobGroup(group, group)
-    try:
-        yield ids
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        # job-start events reach the status store through the listener bus
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def unpinned(spark, path: str, events: bool = False):
@@ -63,7 +42,7 @@ def write(path, **cols) -> None:
 
 
 @pytest.mark.parametrize("name", TABLES)
-def test_second_load_runs_no_job_and_matches_unpinned_read(spark, sf_dir, name):
+def test_second_load_runs_no_job_and_matches_unpinned_read(spark, sf_dir, name, jobs_run):
     load(spark, sf_dir, name)
     with jobs_run(spark) as jobs:
         df = load(spark, sf_dir, name)
@@ -73,7 +52,7 @@ def test_second_load_runs_no_job_and_matches_unpinned_read(spark, sf_dir, name):
     assert df.collect() == ref.collect()
 
 
-def test_rewrite_with_added_column_reinfers_once(spark, tmp_path):
+def test_rewrite_with_added_column_reinfers_once(spark, tmp_path, jobs_run):
     path = tmp_path / "region.parquet"
     write(path, a=[1, 2])
     load(spark, str(tmp_path), "region")
@@ -89,7 +68,7 @@ def test_rewrite_with_added_column_reinfers_once(spark, tmp_path):
     assert [tuple(r) for r in df.collect()] == [(1, "x"), (2, "y")]
 
 
-def test_same_size_rewrite_with_new_mtime_reinfers(spark, tmp_path):
+def test_same_size_rewrite_with_new_mtime_reinfers(spark, tmp_path, jobs_run):
     path = tmp_path / "nation.parquet"
     write(path, a=[1, 2])
     load(spark, str(tmp_path), "nation")
@@ -105,7 +84,7 @@ def test_same_size_rewrite_with_new_mtime_reinfers(spark, tmp_path):
     assert len(jobs) == 1
 
 
-def test_directory_dataset_new_part_file_invalidates(spark, tmp_path):
+def test_directory_dataset_new_part_file_invalidates(spark, tmp_path, jobs_run):
     table = tmp_path / "orders.parquet"
     table.mkdir()
     write(table / "part-00000.parquet", a=[1, 2])
@@ -166,7 +145,7 @@ def test_directory_schema_follows_merge_schema(spark, tmp_path):
 
 @pytest.mark.parametrize("prior", [None, "false"])
 def test_events_ts_is_a_timestamp_on_a_hit_and_nanos_flag_is_restored(
-    spark, sf_dir, tmp_path, prior
+    spark, sf_dir, tmp_path, prior, jobs_run
 ):
     """``events`` written as INT64 TIMESTAMP(NANOS): miss and hit both read
     ``ts`` as the micro-precision timestamp, and the legacy flag is back to
@@ -199,7 +178,7 @@ def test_events_ts_is_a_timestamp_on_a_hit_and_nanos_flag_is_restored(
             spark.conf.set(NANOS, saved)
 
 
-def test_load_leaves_the_sessions_timestamp_inference_alone(spark, sf_dir, tmp_path):
+def test_load_leaves_the_sessions_timestamp_inference_alone(spark, sf_dir, tmp_path, jobs_run):
     """``load`` reads naive timestamps as ``timestamp`` but leaves the
     caller's ``inferTimestampNTZ`` as it found it, on a miss and on a hit,
     so the caller's own later parquet reads still infer ``timestamp_ntz``."""
@@ -222,7 +201,7 @@ RELATIONAL = sorted(n for n in all_queries() if int(n[1:].split("_", 1)[0]) <= 3
 
 
 @pytest.mark.parametrize("name", RELATIONAL)
-def test_relational_tier_builds_without_a_job(spark, sf_dir, name):
+def test_relational_tier_builds_without_a_job(spark, sf_dir, name, jobs_run):
     """q01-q33 build their DataFrames with no Spark job once the catalog has
     seen their tables: no per-load schema inference, no build-time action."""
     q = all_queries()[name]

@@ -5,11 +5,14 @@ can't express (SURVEY §2.2 B30/B31, §2.4 E2/E4/E6).
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
 
-from mrcond_spark.catalog import load
+from mrcond_spark import operators
+from mrcond_spark.catalog import load, table_path
 from mrcond_spark.operators import dedup, multimodal, similarity
 from mrcond_spark.operators.asof import asof_join
 from mrcond_spark.queries.llm import PINNED_VEC_IDS
@@ -1068,3 +1071,41 @@ def test_decoded_audio_features_distributed_truncation_guard(spark):
     assert len(got) == 1
     assert got[0]["decode_error"] and "truncated chunk" in got[0]["decode_error"]
     assert got[0]["rms"] is None
+
+
+def test_spread_leaves_a_small_scan_untouched_without_a_job(spark, sf_dir, jobs_run):
+    """An input Catalyst sizes at one spread partition or less comes back as
+    the same object, with no round-robin exchange and no job."""
+    if os.path.getsize(table_path(sf_dir, "documents")) > operators.SPREAD_BYTES:
+        pytest.skip("documents spans several spread partitions at this scale")
+    docs = load(spark, sf_dir, "documents")
+    with jobs_run(spark) as jobs:
+        out = operators.ensure_parallelism(docs)
+    assert out is docs
+    assert jobs == []
+
+
+def test_spread_sizes_a_single_split_input_by_its_bytes(spark):
+    """A single-split input spreads over ``ceil(bytes / SPREAD_BYTES)``
+    partitions, at most one per core."""
+    cores = spark.sparkContext.defaultParallelism
+    for spreads, parts in [(2.5, 3), (cores + 0.5, cores)]:
+        # Catalyst sizes a range at 8 bytes a row
+        df = spark.range(0, int(spreads * operators.SPREAD_BYTES) // 8, 1, 1)
+        assert operators.ensure_parallelism(df).rdd.getNumPartitions() == parts
+
+
+def test_q88_builds_without_a_job_or_a_round_robin_exchange(spark, sf_dir, jobs_run):
+    """With its documents scan below the spread size, q88's lazy checkpoint
+    holds no round-robin exchange, whose stage AQE would run as a job while
+    the plan is built."""
+    from mrcond_spark.queries import all_queries
+
+    if os.path.getsize(table_path(sf_dir, "documents")) > operators.SPREAD_BYTES:
+        pytest.skip("documents spans several spread partitions at this scale")
+    q88 = all_queries()["q88_decontamination"]
+    q88.spark(spark, sf_dir)  # warm the catalog's schema cache
+    with operators.capture_preckpt_plans() as plans, jobs_run(spark) as jobs:
+        q88.spark(spark, sf_dir)
+    assert jobs == []
+    assert plans and not any("RoundRobinPartitioning" in p for p in plans)

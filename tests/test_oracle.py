@@ -11,6 +11,7 @@ import math
 
 import pytest
 
+from mrcond_spark import operators
 from mrcond_spark.queries import all_queries
 
 QUERIES = all_queries()
@@ -60,6 +61,34 @@ def test_oracle_match(name, spark, duck, sf_dir):
     cs, cd = canon_rows(s_cols, s_rows), canon_rows(d_cols, d_rows)
     mismatches = [(a, b) for a, b in zip(cs, cd) if a != b]
     assert not mismatches, f"{name}: first mismatched rows (spark vs duckdb): {mismatches[:5]}"
+
+
+#: The declared queries whose plans pass through ``ensure_parallelism``
+#: (every call the corpus makes while building, recorded at sf0.001).
+SPREAD_QUERIES = sorted("""
+    q47_minhash_lsh_pairs q48_simhash_pairs q49_ann_lsh q50_multimodal_features
+    q54_embedding_near_dup q55_ngram_jaccard q56_ann_ivf q57_mllib_minhash_pairs
+    q62_simhash_near_pairs q75_near_dup_removal q88_decontamination
+    q99_semantic_dedup q105_ngram_novelty q118_importance_weights
+    q127_embedding_covariance q134_table_profile q153_split_leakage
+    q157_column_profiler q165_incremental_near_dup q173_normal_equations
+    q181_repeated_spans q182_bootstrap_variance
+""".split())
+
+
+@pytest.mark.parametrize("name", SPREAD_QUERIES)
+def test_rows_do_not_depend_on_the_spread(name, spark, sf_dir, monkeypatch):
+    """Each query returns the same rows whether ``ensure_parallelism`` sizes
+    its spread or spreads every input over all cores, as it did before it
+    read the input's size."""
+
+    def rows():
+        sdf = QUERIES[name].spark(spark, sf_dir)
+        return canon_rows(sdf.columns, [tuple(r) for r in sdf.collect()])
+
+    gated = rows()
+    monkeypatch.setattr(operators, "SPREAD_BYTES", 1)
+    assert rows() == gated
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY_QUERIES)
