@@ -54,9 +54,6 @@ TABLES = (
     "embeddings",
 )
 
-#: dimension tables small enough to broadcast at any scale factor
-BROADCAST_TABLES = frozenset({"region", "nation"})
-
 _NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 _INFER_NTZ = "spark.sql.parquet.inferTimestampNTZ.enabled"
 

@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .prefix_sum import banded_running_sums
+
 
 def global_rank(
     df: DataFrame,
@@ -127,52 +129,29 @@ def grouped_hash_rank(
     """Append ``out_col`` = ROW_NUMBER() OVER (PARTITION BY group_cols
     ORDER BY hash_col, tiebreak_cols) — safe when the group key has O(1)
     cardinality, where a plain window makes each partition a
-    corpus/|groups|-row single task (the q151 lesson; see
-    `operators/weighted.py`). Fully LAZY, unlike `global_rank` — no
-    construction-time jobs:
-
-    1. band = the first ``band_chars`` hex chars of ``hash_col`` (256
-       bands at 2 chars) — a prefix is monotone in the string order, so
-       per-group ``(hash, tiebreaks)`` order equals ``(band, hash,
-       tiebreaks)``; uniform hashes make bands uniform BY CONSTRUCTION,
-       no cutpoint sketch needed;
-    2. within-band ``row_number`` windowed on (groups..., band) —
-       parallelism = |groups| x 16^band_chars;
-    3. band offsets from a (groups..., band) count aggregate — up to
-       |groups| x 16^band_chars rows — joined back WITHOUT a broadcast
-       hint; rank = offset + within-band row_number. AQE picks broadcast
-       at runtime from the frame's ACTUAL size (round-6 ADVICE: an
-       explicit hint bypasses autoBroadcastJoinThreshold, and a caller
-       like stratified_sample_exact at its documented 100k-strata cap
-       makes offs ~25.6M rows — an OOM, not metadata).
+    corpus/|groups|-row single task. Fully LAZY, unlike `global_rank`: the
+    rank is ``prefix_sum.banded_running_sums`` of 1 over that total order,
+    banded by the first ``band_chars`` hex chars of ``hash_col`` (256 bands
+    at 2 chars). A prefix is monotone in the string order, and uniform
+    hashes make bands uniform BY CONSTRUCTION, so no cutpoint sketch is
+    needed. The band-offset join carries no broadcast hint: a caller like
+    stratified_sample_exact at its 100k-strata cap makes the offset frame
+    ~25.6M rows, so AQE decides from its actual size.
 
     ``hash_col`` must be a non-NULL fixed-width lowercase-hex string
     (e.g. ``F.md5(...)``); ``group_cols`` + ``hash_col`` + ``tiebreak_cols``
     must be NULL-free (NULL group keys would silently form their own
     band-join group — filter or map them first)."""
-    banded = df.withColumn("__band", F.substring(F.col(hash_col), 1, band_chars))
-    w_in = Window.partitionBy(*group_cols, "__band").orderBy(
-        hash_col, *tiebreak_cols
-    )
-    local = banded.withColumn("__brn", F.row_number().over(w_in))
-    w_off = (
-        Window.partitionBy(*group_cols)
-        .orderBy("__band")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offs = (
-        banded.groupBy(*group_cols, "__band")
-        .agg(F.count(F.lit(1)).alias("__bn"))
-        .select(
-            *group_cols,
-            "__band",
-            F.coalesce(F.sum("__bn").over(w_off), F.lit(0)).alias("__boff"),
-        )
-    )
     return (
-        local.join(offs, [*group_cols, "__band"])
-        .withColumn(out_col, (F.col("__boff") + F.col("__brn")).cast("bigint"))
-        .drop("__band", "__brn", "__boff")
+        banded_running_sums(
+            df,
+            group_cols,
+            F.substring(F.col(hash_col), 1, band_chars),
+            [hash_col, *tiebreak_cols],
+            {"__r": F.lit(1)},
+        )
+        .withColumn(out_col, F.col("__r").cast("bigint"))
+        .drop("__r", "__r_total")
     )
 
 

@@ -1,11 +1,14 @@
-"""Distributed running sum over a global order — no single-reducer window.
+"""Distributed running sums — no single-reducer window.
 
 A naive ``SUM(x) OVER (ORDER BY k)`` (no PARTITION BY) plans a
 single-partition Window: one reducer scans the entire table — the same
-scale-killer shape the distributed NTILE replaced (`ntile.py`). This
-operator computes the IDENTICAL running sum with every data-sized stage
-distributed, for the common case where the global order can be split into
-an order-aligned bucket column plus a within-bucket order:
+scale-killer shape the distributed NTILE replaced (`ntile.py`). Its
+low-cardinality cousin, ``SUM(x) OVER (PARTITION BY g ORDER BY k)`` with
+O(1) groups, makes each window partition a corpus/|groups|-row single
+task. This module computes the IDENTICAL running sums with every
+data-sized stage distributed, in two forms.
+
+``bucketed_running_sum`` (global order, EAGER):
 
 1. caller supplies ``bucket_col`` such that the global order equals
    ``(bucket ASC, *order_cols ASC)`` — e.g. the first hex character of an
@@ -23,6 +26,11 @@ partial-agg shuffle for the totals, one bounded collect, one
 hash-partitioned window; no ``Exchange SinglePartition`` anywhere (explicitly asserted for q97 in tests/test_prefix_sum_property.py;
 the corpus-wide guard in tests/test_plans.py covers the related
 empty-partition-spec Window shape for every query).
+
+``banded_running_sums`` (per group, LAZY — the two-level banded window
+behind q145, q151, q169, q183 and q184): the same offset-plus-local sum,
+with the offsets computed in the plan from a |groups x bands|-row
+aggregate instead of collected, so construction runs no job.
 """
 
 from __future__ import annotations
@@ -141,4 +149,73 @@ def bucketed_running_sum(
     nonnull_so_far = base_cnt + F.count(value_col).over(w)
     return df.withColumn(
         out_col, F.when(nonnull_so_far > 0, running)  # else NULL, like SQL SUM
+    )
+
+
+def banded_running_sums(
+    df: DataFrame,
+    group_cols: list[str],
+    band: Column,
+    order_cols: list[str],
+    sums: dict[str, Column],
+    broadcast: bool = False,
+) -> DataFrame:
+    """``df`` plus, for each ``name -> value`` in ``sums``, the inclusive
+    running sum ``name`` = ``SUM(value) OVER (PARTITION BY group_cols
+    ORDER BY order_cols ROWS UNBOUNDED PRECEDING)`` and the group total
+    ``name_total`` = ``SUM(value) OVER (PARTITION BY group_cols)``.
+
+    ``band`` must be monotone in the order — within a group, ordering by
+    ``order_cols`` must equal ordering by ``(band, *order_cols)`` — and
+    NON-NULL: a NULL band drops its rows from the offset equi-join.
+    ``group_cols`` must be NULL-free for the same reason. With ties in
+    ``order_cols`` the running sums of tied rows follow the window's
+    arbitrary tie order, exactly as the plain window's do.
+
+    Plan shape: the in-band running sums window on ``(groups, band)`` —
+    parallelism |groups| x |bands|; band offsets and group totals window
+    over a ``(groups, band)`` aggregate, a |groups x bands|-row frame, and
+    join back on ``(groups, band)``. ``broadcast=True`` hints that join:
+    the caller attests |groups x bands| is metadata-sized. The default
+    leaves it to AQE, because a hint bypasses autoBroadcastJoinThreshold
+    and an unbounded group key would make the offset frame data-sized.
+    An unused ``name_total`` costs nothing: column pruning drops its
+    window. Fully lazy: no construction-time job.
+    """
+    keys = [*group_cols, "__band"]
+    banded = df.withColumn("__band", band)
+    w_in = (
+        Window.partitionBy(*keys)
+        .orderBy(*order_cols)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    w_off = (
+        Window.partitionBy(*group_cols)
+        .orderBy("__band")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    w_g = Window.partitionBy(*group_cols)
+    local = banded.select(
+        "*", *[F.sum(v).over(w_in).alias(f"__in_{x}") for x, v in sums.items()]
+    )
+    offs = (
+        banded.groupBy(*keys)
+        .agg(*[F.sum(v).alias(f"__bt_{x}") for x, v in sums.items()])
+        .select(
+            *keys,
+            *[
+                F.coalesce(F.sum(f"__bt_{x}").over(w_off), F.lit(0)).alias(
+                    f"__off_{x}"
+                )
+                for x in sums
+            ],
+            *[F.sum(f"__bt_{x}").over(w_g).alias(f"{x}_total") for x in sums],
+        )
+    )
+    if broadcast:
+        offs = F.broadcast(offs)
+    return (
+        local.join(offs, keys)
+        .withColumns({x: F.col(f"__off_{x}") + F.col(f"__in_{x}") for x in sums})
+        .drop("__band", *[f"__{p}_{x}" for p in ("in", "off") for x in sums])
     )

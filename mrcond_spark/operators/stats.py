@@ -12,11 +12,11 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from . import materialize_once
+from .prefix_sum import banded_running_sums
 
 
 def moment_stats(
@@ -63,40 +63,20 @@ _BAND_POS_INF = 2**63 - 2
 _BAND_NAN = 2**63 - 1
 
 
-def _banded_running_counts(
-    counts: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    cnt_col: str,
-    band_width: float,
-    hint_broadcast_offs: bool = False,
-) -> DataFrame:
-    """Per-row exact running count ``__cw`` and group total ``__tw`` over a
-    weighted value frame, with every data-sized stage distributed.
-
-    The two-level banded idiom from ``operators/weighted.py``: a plain
-    ``SUM(cnt) OVER (PARTITION BY g ORDER BY v)`` puts a whole group in one
-    window task; banding on ``floor(v / band_width)`` (monotonic in ``v``)
-    splits each group into |bands| independent window partitions, and the
-    per-band offsets come from a |groups x bands|-row aggregate broadcast
-    back. Duplicate ``value_col`` rows are safe: tied rows may accumulate
-    in either order, but every consumer selects by VALUE at a count gate,
-    and all orderings agree on the smallest value whose cumulative count
-    clears a threshold.
-
-    Non-finite values get PINNED bands instead of ``floor``'s NULL/overflow
-    (a NULL band would silently drop the row from the offset equi-join
-    while its count still reached the group total — the round-6 NULL
-    finding's sibling): ``-Infinity`` below every finite band, ``+Infinity``
-    above, ``NaN`` last — matching both engines' sort order, so a >5%
-    NaN tail correctly surfaces in p95 rather than vanishing.
-    """
+def _pinned_band(df: DataFrame, value_col: str, band_width: float) -> Column:
+    """Band ``floor(value / band_width)`` for ``banded_running_sums``, with
+    non-finite values PINNED instead of ``floor``'s NULL/overflow (a NULL
+    band would silently drop the row from the offset equi-join while its
+    count still reached the group total): ``-Infinity`` below every
+    finite band, ``+Infinity`` above, ``NaN`` last — matching both
+    engines' sort order, so a >5% NaN tail correctly surfaces in p95
+    rather than vanishing."""
     # isfinite + > 0 rejects NaN, +-inf, 0, and negatives — inf slipped the
     # old `> 0` check and folded every finite value into band 0 (round-7
     # ADVICE: the guard must match the "positive finite" message)
     if not (math.isfinite(float(band_width)) and float(band_width) > 0):
         raise ValueError(
-            f"_banded_running_counts: band_width={band_width} must be a "
+            f"robust_stats: band_width={band_width} must be a "
             "positive finite number (a negative width inverts band order "
             "and silently corrupts every quantile gate; an infinite width "
             "folds every value into one band)"
@@ -109,51 +89,13 @@ def _banded_running_counts(
         ),
         F.lit(_BAND_FINITE_MIN),
     )
-    if dict(counts.dtypes)[value_col] in ("double", "float"):
-        band = (
-            F.when(F.isnan(v), F.lit(_BAND_NAN))
-            .when(v == F.lit(float("inf")), F.lit(_BAND_POS_INF))
-            .when(v == F.lit(float("-inf")), F.lit(_BAND_NEG_INF))
-            .otherwise(finite_band)
-        )
-    else:  # exact types (decimal/int) cannot hold NaN/inf; isnan won't parse
-        band = finite_band
-    li = counts.withColumn("__band", band)
-    w_in = (
-        Window.partitionBy(*group_cols, "__band")
-        .orderBy(value_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    banded = li.select(
-        *group_cols, "__band", value_col,
-        F.sum(cnt_col).over(w_in).alias("__cw_in"),
-    )
-    band_tot = li.groupBy(*group_cols, "__band").agg(F.sum(cnt_col).alias("__bt"))
-    w_off = (
-        Window.partitionBy(*group_cols)
-        .orderBy("__band")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_g = Window.partitionBy(*group_cols)
-    offs = band_tot.select(
-        *group_cols,
-        "__band",
-        F.coalesce(F.sum("__bt").over(w_off), F.lit(0)).alias("__off"),
-        F.sum("__bt").over(w_g).alias("__tw"),
-    )
-    # offs is |groups| x |bands| rows — metadata-sized for bounded group
-    # keys but UNBOUNDED in |groups| generally, and an unconditional hint
-    # would bypass autoBroadcastJoinThreshold (the ntile.py round-6
-    # advisory pattern). Default: AQE picks broadcast from the frame's
-    # actual runtime size; callers that KNOW their group key is bounded
-    # opt in to the hint and skip AQE's extra exchange round-trip.
-    if hint_broadcast_offs:
-        offs = F.broadcast(offs)
-    return banded.join(offs, [*group_cols, "__band"]).select(
-        *group_cols,
-        value_col,
-        (F.col("__off") + F.col("__cw_in")).alias("__cw"),
-        "__tw",
+    if dict(df.dtypes)[value_col] not in ("double", "float"):
+        return finite_band  # exact types cannot hold NaN/inf; isnan won't parse
+    return (
+        F.when(F.isnan(v), F.lit(_BAND_NAN))
+        .when(v == F.lit(float("inf")), F.lit(_BAND_POS_INF))
+        .when(v == F.lit(float("-inf")), F.lit(_BAND_NEG_INF))
+        .otherwise(finite_band)
     )
 
 
@@ -187,10 +129,10 @@ def robust_stats(
       each ``percentile_disc`` quantile is the smallest stored value whose
       exact running count clears an integer gate (``cw * den >= num * n``
       — the integer form of ``cume_dist >= p``, verified against DuckDB on
-      tied multisets of both parities). Running counts use the two-level
-      banded window from ``operators/weighted.py``, so parallelism is
-      |groups| x |bands| and per-task state is one band of DISTINCT
-      values — the exact path no longer needs a value-buffering
+      tied multisets of both parities). Running counts come from
+      ``prefix_sum.banded_running_sums`` over ``_pinned_band``, so
+      parallelism is |groups| x |bands| and per-task state is one band
+      of DISTINCT values — the exact path no longer needs a value-buffering
       ``percentile_disc`` aggregate, which capped the old route at
       ~10^8-row groups. The MAD reruns the same selection over
       ``abs(value - med)`` with the same multiplicities. Bit-identical to
@@ -283,19 +225,23 @@ def robust_stats(
             lo = float(lohi["lo"]) if lohi["lo"] is not None else 0.0
             hi = float(lohi["hi"]) if lohi["hi"] is not None else 0.0
             band_width = max((hi - lo) / 256.0, 1e-9)
-        cum = _banded_running_counts(
-            counts, group_cols, value_col, "__cnt", band_width,
-            hint_broadcast_offs=bounded_groups,
+        # Tied values may accumulate in either order: every consumer
+        # selects by VALUE at a count gate, and all orderings agree on the
+        # smallest value whose running count clears it.
+        cum = banded_running_sums(
+            counts, group_cols, _pinned_band(counts, value_col, band_width),
+            [value_col], {"__cw": F.col("__cnt")}, broadcast=bounded_groups,
         )
         q = cum.groupBy(*group_cols).agg(
             # coalesce: groups are never empty, but a bare max() is marked
             # nullable and the approx path's count(*) is not — keep the two
             # backends schema-identical (nullability included).
-            F.coalesce(F.max("__tw"), F.lit(0)).cast("bigint").alias("n"),
+            F.coalesce(F.max("__cw_total"), F.lit(0)).cast("bigint").alias("n"),
             *[
                 F.min(
                     F.when(
-                        F.col("__cw") * F.lit(den) >= F.lit(num) * F.col("__tw"),
+                        F.col("__cw") * F.lit(den)
+                        >= F.lit(num) * F.col("__cw_total"),
                         F.col(value_col),
                     )
                 ).alias(name)
@@ -319,13 +265,13 @@ def robust_stats(
             F.abs(F.col(value_col) - F.col("med")).alias("__av"),
             "__cnt",
         )
-        cum_av = _banded_running_counts(
-            av, group_cols, "__av", "__cnt", band_width,
-            hint_broadcast_offs=bounded_groups,
+        cum_av = banded_running_sums(
+            av, group_cols, _pinned_band(av, "__av", band_width),
+            ["__av"], {"__cw": F.col("__cnt")}, broadcast=bounded_groups,
         )
         mad = cum_av.groupBy(*group_cols).agg(
             F.min(
-                F.when(2 * F.col("__cw") >= F.col("__tw"), F.col("__av"))
+                F.when(2 * F.col("__cw") >= F.col("__cw_total"), F.col("__av"))
             ).alias("mad")
         )
         # |groups|-row frames, but |groups| is unbounded in general —
@@ -399,16 +345,13 @@ def mann_whitney_u_x2(
     large samples can normalize downstream (kept out of this operator: the
     z-score needs a sqrt, and libm does not reproduce across engines).
 
-    Plan shape / 100 TB — the q151 two-level banded-window idiom applied
-    to MIDRANKS: per-group midranks are a running count over DISTINCT
-    values, and ``SUM() OVER (PARTITION BY group ORDER BY v)`` with O(1)
-    groups would be a corpus-sized single task. Instead: (1) one
+    Plan shape / 100 TB: per-group midranks are a running count over
+    DISTINCT values, and ``SUM() OVER (PARTITION BY group ORDER BY v)``
+    with O(1) groups would be a corpus-sized single task. Instead: (1) one
     (group, value) hash aggregate collapses rows to distinct values
-    (cnt_a, cnt); (2) within-band running counts window on
-    (group, band = v div band_width) — parallelism = |groups| x |bands|;
-    (3) band offsets come from a |groups x bands|-row aggregate whose
-    per-group window touches only metadata-sized input, broadcast back;
-    (4) per-value contributions (cnt_a * (2*less + cnt + 1) = the A rows'
+    (cnt_a, cnt); (2) ``prefix_sum.banded_running_sums`` gives the running
+    count, banded on ``v div band_width`` with the broadcast offset join;
+    (3) per-value contributions (cnt_a * (2*less + cnt + 1) = the A rows'
     doubled midrank mass at that value) fold into one final group
     aggregate. Fully lazy, no construction job.
     """
@@ -423,27 +366,9 @@ def mann_whitney_u_x2(
     ).withColumn("band", F.expr(f"v div {int(band_width)}"))
     # same two-consumer aggregate shape as ks_d_numerator: evaluate once.
     vals = materialize_once(vals, eager=False)
-    w_in = (
-        Window.partitionBy("g", "band")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    banded = vals.select("g", "band", "v", "ca", "c", F.sum("c").over(w_in).alias("cum_in"))
-    band_tot = vals.groupBy("g", "band").agg(F.sum("c").alias("bt"))
-    w_off = (
-        Window.partitionBy("g")
-        .orderBy("band")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offs = band_tot.select(
-        "g", "band", F.coalesce(F.sum("bt").over(w_off), F.lit(0)).alias("off")
-    )
-    contrib = banded.join(F.broadcast(offs), ["g", "band"]).select(
-        "g",
-        "ca",
-        "c",
-        (F.col("off") + F.col("cum_in") - F.col("c")).alias("less"),
-    )
+    contrib = banded_running_sums(
+        vals, ["g"], F.col("band"), ["v"], {"cum": F.col("c")}, broadcast=True
+    ).select("g", "ca", "c", (F.col("cum") - F.col("c")).alias("less"))
     # two_ra ~ 2*R_A <= n(n+1) wraps a silent (non-ANSI) BIGINT sum once a
     # group side passes ~3e9 rows — accumulate in DECIMAL(38,0) and guard
     # the output cast loudly, the same contract as ks_d_numerator below.
@@ -496,12 +421,12 @@ def ks_d_numerator(
     ``(group_col, n_a, n_b, d_num)``.
 
     The CDF difference is piecewise constant and changes only AT observed
-    values, so scanning distinct values suffices. Running counts use the
-    same two-level banded decomposition as ``mann_whitney_u_x2`` (a plain
-    per-group ordered window would single-task the corpus when groups are
-    O(1)): per-(group, band) running counts of BOTH sides, band offsets
-    and group totals from the metadata-sized (group, band) aggregate,
-    broadcast back, one final max aggregate. d_num grows as n^2 — BIGINT
+    values, so scanning distinct values suffices. Running counts of BOTH
+    sides and their group totals come from
+    ``prefix_sum.banded_running_sums``, banded on ``v div band_width`` as
+    in ``mann_whitney_u_x2`` (a plain per-group ordered window would
+    single-task the corpus when groups are O(1)), then one final max
+    aggregate. d_num grows as n^2 — BIGINT
     through ~10^9 rows per group side; the internal product is computed
     in DECIMAL(38,0), and a d_num beyond BIGINT range raises loudly at
     the output cast (round-6 ADVICE: Spark's non-ANSI decimal-to-bigint
@@ -520,52 +445,26 @@ def ks_d_numerator(
     # vals is a shuffle-priced aggregate consumed by TWO branches (in-band
     # window + band totals): evaluate once (PERF.md multi-consumer rule).
     vals = materialize_once(vals, eager=False)
-    w_in = (
-        Window.partitionBy("g", "band")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    banded = vals.select(
-        "g",
-        "band",
-        "v",
-        F.sum("ca").over(w_in).alias("ca_in"),
-        F.sum("cb").over(w_in).alias("cb_in"),
-    )
-    band_tot = vals.groupBy("g", "band").agg(
-        F.sum("ca").alias("bta"), F.sum("cb").alias("btb")
-    )
-    w_off = (
-        Window.partitionBy("g")
-        .orderBy("band")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_g = Window.partitionBy("g")
-    offs = band_tot.select(
-        "g",
-        "band",
-        F.coalesce(F.sum("bta").over(w_off), F.lit(0)).alias("offa"),
-        F.coalesce(F.sum("btb").over(w_off), F.lit(0)).alias("offb"),
-        F.sum("bta").over(w_g).alias("na"),
-        F.sum("btb").over(w_g).alias("nb"),
+    cum = banded_running_sums(
+        vals,
+        ["g"],
+        F.col("band"),
+        ["v"],
+        {"cum_a": F.col("ca"), "cum_b": F.col("cb")},
+        broadcast=True,
     )
     dec = "decimal(38,0)"
-    cum = banded.join(F.broadcast(offs), ["g", "band"]).select(
-        "g",
-        "na",
-        "nb",
-        F.abs(
-            (F.col("offa") + F.col("ca_in")).cast(dec) * F.col("nb").cast(dec)
-            - (F.col("offb") + F.col("cb_in")).cast(dec) * F.col("na").cast(dec)
-        ).alias("dev"),
+    dev = F.abs(
+        F.col("cum_a").cast(dec) * F.col("cum_b_total").cast(dec)
+        - F.col("cum_b").cast(dec) * F.col("cum_a_total").cast(dec)
     )
     bigint_max = F.lit("9223372036854775807").cast(dec)
     return (
         cum.groupBy("g")
         .agg(
-            F.max("na").cast("bigint").alias("n_a"),
-            F.max("nb").cast("bigint").alias("n_b"),
-            F.max("dev").alias("__dev"),
+            F.max("cum_a_total").cast("bigint").alias("n_a"),
+            F.max("cum_b_total").cast("bigint").alias("n_b"),
+            F.max(dev).alias("__dev"),
         )
         .select(
             F.col("g").alias(group_col),

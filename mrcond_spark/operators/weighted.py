@@ -2,19 +2,11 @@
 
 ``SUM(w) OVER (PARTITION BY g ORDER BY v)`` is the natural running-weight
 plan, but when the group key has O(1) cardinality each window partition is
-a corpus/|groups|-row single task — the low-cardinality cousin of the
-single-reducer window this repo eliminated in `ntile.py`/`prefix_sum.py`.
-This operator computes the identical running weight with every data-sized
-stage distributed:
-
-1. ``band = floor(value / band_width)`` — monotonic in the value, so the
-   global per-group order ``(value, tiebreak)`` equals
-   ``(band, value, tiebreak)``;
-2. within-band running sums window on ``(group, band)`` — parallelism =
-   |groups| x |bands|;
-3. band offsets and group totals come from a ``(group, band)`` aggregate —
-   a |groups x bands|-row frame whose per-group windows touch only
-   metadata-sized input — broadcast-joined back.
+a corpus/|groups|-row single task. ``prefix_sum.banded_running_sums``
+computes the identical running weight with every data-sized stage
+distributed, banded on ``floor(value / band_width)`` — monotonic in the
+value, so the per-group order ``(value, weight)`` equals ``(band, value,
+weight)``.
 
 The weighted median is then the smallest value whose running weight
 reaches half the group total, decided on exact integer weights
@@ -29,7 +21,8 @@ import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+from .prefix_sum import banded_running_sums
 
 
 def weighted_median(
@@ -47,13 +40,14 @@ def weighted_median(
     filter NULLs first. The same applies to NaN / +-Infinity doubles
     (``floor`` gives them a NULL band); this operator's callers are
     integer/decimal-typed, so the contract is FINITE values — for
-    doubles with possible non-finite tails use the pinned-band variant
-    in ``operators/stats._banded_running_counts``. ``weight_col`` must be integer-typed (exact gate
-    arithmetic) and non-negative; rows with zero weight never become the
-    median unless tied on value with positive-weight rows (they add
-    nothing to the running sum). ``band_width`` trades parallelism against the size of
-    the broadcast offset frame: aim for tens-to-hundreds of bands over
-    the value domain (for unknown domains derive bands from approx
+    doubles with possible non-finite tails use the pinned bands of
+    ``operators/stats._pinned_band``. ``weight_col`` must be
+    integer-typed (exact gate arithmetic) and non-negative; rows with
+    zero weight never become the median unless tied on value with
+    positive-weight rows (they add nothing to the running sum).
+    ``band_width`` trades parallelism against the size of the broadcast
+    offset frame: aim for tens-to-hundreds of bands over the value
+    domain (for unknown domains derive bands from approx
     quantiles instead of a fixed width).
     """
     # isfinite + > 0 rejects NaN, +-inf, 0, and negatives — inf slipped the
@@ -70,39 +64,20 @@ def weighted_median(
         F.col(group_col).alias("g"),
         F.col(value_col).alias("v"),
         F.col(weight_col).alias("wt"),
-    ).withColumn(
-        "band", F.floor(F.col("v") / F.lit(float(band_width))).cast("long")
     )
-    w_in = (
-        Window.partitionBy("g", "band")
-        .orderBy("v", "wt")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    banded = li.select(
-        "g", "band", "v", F.sum("wt").over(w_in).alias("cw_in")
-    )
-    band_tot = li.groupBy("g", "band").agg(F.sum("wt").alias("bt"))
-    # |groups x bands| rows only — metadata-sized window input.
-    w_off = (
-        Window.partitionBy("g")
-        .orderBy("band")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_g = Window.partitionBy("g")
-    offs = band_tot.select(
-        "g",
-        "band",
-        F.coalesce(F.sum("bt").over(w_off), F.lit(0)).alias("off"),
-        F.sum("bt").over(w_g).alias("tw"),
-    )
-    cum = banded.join(F.broadcast(offs), ["g", "band"]).select(
-        "g", "v", (F.col("off") + F.col("cw_in")).alias("cw"), "tw"
+    cum = banded_running_sums(
+        li,
+        ["g"],
+        F.floor(F.col("v") / F.lit(float(band_width))).cast("long"),
+        ["v", "wt"],
+        {"cw": F.col("wt")},
+        broadcast=True,
     )
     return (
         cum.groupBy("g")
         .agg(
-            F.max("tw").cast("bigint").alias("total_weight"),
-            F.min(F.when(2 * F.col("cw") >= F.col("tw"), F.col("v"))).alias(
+            F.max("cw_total").cast("bigint").alias("total_weight"),
+            F.min(F.when(2 * F.col("cw") >= F.col("cw_total"), F.col("v"))).alias(
                 "weighted_median"
             ),
         )

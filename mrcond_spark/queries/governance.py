@@ -35,11 +35,8 @@ from .llm import PLANT_OFFSET, plant_duplicates
 from ..operators.splits import TRAIN_PCT, VAL_PCT, split_assignment
 from ..operators.splits import sql_split as _sql_split
 
-#: q158 training-run token budget (absolute, like q97's TOKEN_BUDGET) and
-#: the mixture temperature exponent (0.5 = sqrt-scaled sampling, the
-#: common multilingual-mixture compromise between natural and uniform).
+#: q158 training-run token budget (absolute, like q97's TOKEN_BUDGET).
 EPOCH_BUDGET = 1_000_000
-MIX_ALPHA = 0.5
 
 #: q156 reported top adjacent-pair count.
 TOP_PAIRS = 30

@@ -46,33 +46,21 @@ import math
 #: task parallelism. The CDC drain (``pipeline.start_cdc_query``) runs no
 #: shuffle, so this count does not reach it. The constant therefore stays
 #: a MEMORY GUARDRAIL, exact only near its 100k anchor:
-#: for join/dedup state (where input rows DO land in the store) keep the
-#: rows-linear rule; for low-cardinality aggregations pass
-#: ``max_parts~=8`` (the measured plateau) — partitions above it buy
+#: for join/dedup state (where input rows DO land in the store) the
+#: rows-linear rule holds; for low-cardinality aggregations ~8 partitions
+#: (the measured plateau) is the useful ceiling — partitions above it buy
 #: nothing on any swept volume. A warmed re-run of the sweep (round 9,
 #: after the tool gained a discarded warm-up drain) confirmed the
 #: plateau and widened it: 2/4/8 are within-noise co-winners at both
 #: off-anchor volumes, the linear prediction trails at 0.78x (10k) and
 #: 0.62x (1M) of the winner, and counts >=32 degrade 1.7-2.4x.
-#: Deployments with wide rows should still pass their own
-#: ``rows_per_task`` rather than trust a 100x extrapolation.
 ROWS_PER_TASK = 32768
 
 
-def stream_shuffle_partitions(
-    rows_per_trigger: int,
-    rows_per_task: int = ROWS_PER_TASK,
-    min_parts: int = 1,
-    max_parts: int | None = None,
-) -> int:
+def stream_shuffle_partitions(rows_per_trigger: int) -> int:
     """Partition count for a streaming query expecting ``rows_per_trigger``
-    input rows per micro-batch.
-
-    ``ceil(rows_per_trigger / rows_per_task)`` clamped to
-    ``[min_parts, max_parts]``. Pass ``max_parts`` in production (a few x
-    total cores is the usual bound — beyond that, extra partitions buy
-    memory headroom per task, which tiny state slices don't need); the
-    default leaves it uncapped so the sizing stays a pure function of the
+    input rows per micro-batch: ``ceil(rows_per_trigger / ROWS_PER_TASK)``,
+    at least 1 and uncapped, so the sizing stays a pure function of the
     declared volume.
 
     The count is FROZEN into the query's state layout at first start —
@@ -85,18 +73,4 @@ def stream_shuffle_partitions(
             f"stream_shuffle_partitions: rows_per_trigger={rows_per_trigger} "
             "must be >= 0 (the declared per-micro-batch input volume)"
         )
-    if rows_per_task <= 0 or min_parts <= 0:
-        raise ValueError(
-            "stream_shuffle_partitions: rows_per_task and min_parts must be "
-            f"positive (got {rows_per_task}, {min_parts})"
-        )
-    if max_parts is not None and max_parts < min_parts:
-        raise ValueError(
-            f"stream_shuffle_partitions: max_parts={max_parts} < "
-            f"min_parts={min_parts} — contradictory bounds (a silent "
-            "resolution would hide a config error)"
-        )
-    parts = max(min_parts, math.ceil(rows_per_trigger / rows_per_task))
-    if max_parts is not None:
-        parts = min(parts, max_parts)
-    return parts
+    return max(1, math.ceil(rows_per_trigger / ROWS_PER_TASK))

@@ -91,6 +91,41 @@ def test_rows_do_not_depend_on_the_spread(name, spark, sf_dir, monkeypatch):
     assert rows() == gated
 
 
+#: The queries built on ``prefix_sum.banded_running_sums``.
+BANDED_QUERIES = sorted("""
+    q145_robust_stats q151_weighted_median q169_stratified_budget_sample
+    q183_rank_sum_drift q184_ks_drift
+""".split())
+
+#: Shuffle layouts each banded query must not notice.
+LAYOUTS = [
+    {"spark.sql.shuffle.partitions": "1"},
+    {"spark.sql.shuffle.partitions": "7"},
+    {"spark.sql.adaptive.enabled": "false"},
+]
+
+
+@pytest.mark.parametrize("name", BANDED_QUERIES)
+def test_rows_do_not_depend_on_the_shuffle_layout(name, spark, sf_dir):
+    """Each banded query returns the same rows with one shuffle partition,
+    with seven, and with AQE off as in the session's own layout."""
+
+    def rows():
+        sdf = QUERIES[name].spark(spark, sf_dir)
+        return canon_rows(sdf.columns, [tuple(r) for r in sdf.collect()])
+
+    want = rows()
+    for layout in LAYOUTS:
+        saved = {k: spark.conf.get(k) for k in layout}
+        try:
+            for k, v in layout.items():
+                spark.conf.set(k, v)
+            assert rows() == want, layout
+        finally:
+            for k, v in saved.items():
+                spark.conf.set(k, v)
+
+
 @pytest.mark.parametrize("name", ROWS_ONLY_QUERIES)
 def test_rows_only_runs(name, spark, sf_dir):
     q = QUERIES[name]

@@ -10,7 +10,7 @@ before execution, counted through a job group.
 
 Usage:
   python tools/measure_queries.py q132_kcore q170_dedup_components
-  python tools/measure_queries.py --plans plans/r11 --suffix before q132_kcore
+  python tools/measure_queries.py --plans /tmp/plans --suffix before q132_kcore
 """
 
 from __future__ import annotations
