@@ -6,7 +6,9 @@ Each module documents the reference/north-star contract it implements and the
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from collections.abc import Collection
+
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
 
@@ -44,6 +46,45 @@ def seeded_hash60(prefix: str, col: Column) -> Column:
     drift (e.g. a substring length of 6 vs 15 changes the bucket space).
     """
     return hex60(seeded_md5(prefix, col))
+
+
+def bounded_collect(agg: DataFrame, key: str, cap: int, who: str) -> list[Row]:
+    """The rows of ``agg``, sorted by ``key``: the driver-side table an
+    eager builder folds into plan literals (one row per bucket or stratum).
+
+    The job itself is bounded with ``limit(cap + 1)``, so a near-distinct
+    key fails before a data-sized pull reaches the driver. More than
+    ``cap`` rows, or a NULL ``key`` (which has no place in the sorted fold),
+    raises ``ValueError``; ``who`` names the caller and its column, e.g.
+    ``"skyline_2d: bucket expression over 'cost'"``.
+    """
+    rows = agg.limit(cap + 1).collect()
+    if len(rows) > cap:
+        raise ValueError(
+            f"{who} has more than {cap} buckets; coarsen it — it must be a "
+            "bounded split (one driver-side row and one plan literal per "
+            "bucket), not a near-distinct key"
+        )
+    if any(r[key] is None for r in rows):
+        raise ValueError(
+            f"{who} contains NULLs; a NULL has no defined position in the "
+            "sorted order — filter or coalesce it first"
+        )
+    return sorted(rows, key=lambda r: r[key])
+
+
+def literal_lookup(
+    pairs: Collection[tuple[object, object]], key: Column, default: object
+) -> Column:
+    """``pairs[key]`` with the pairs embedded as a map literal, ``default``
+    for a key not among them: ``coalesce(element_at(map, key), default)``,
+    or ``lit(default)`` when there are no pairs. A ``None`` default leaves
+    a missing key NULL (the optimizer drops the NULL from the coalesce).
+    """
+    if not pairs:
+        return F.lit(default)
+    table = F.create_map(*[F.lit(x) for pair in pairs for x in pair])
+    return F.coalesce(F.element_at(table, key), F.lit(default))
 
 
 #: Estimated input bytes per partition that ``ensure_parallelism`` spreads to.
@@ -94,14 +135,11 @@ def capture_preckpt_plans():
     """Context manager: record the PRE-checkpoint plan of every
     ``materialize_once`` call made inside the block.
 
-    Round-12 (r11-verdict item 8): ``localCheckpoint`` truncates lineage,
-    so a committed ``explain()`` capture of a checkpointed operator hides
-    exactly the exchanges an optimization added below the checkpoint — the
-    r11 q180/q105 before/after captures differed only in RDD ids while the
-    real change (a keyed repartition feeding the checkpoint) was invisible.
-    The plan-dump tool (tools/measure_queries.py --plans) wraps plan
-    construction in this context and appends each captured subplan to the
-    capture file, so plans/ evidence shows checkpoint-hidden exchanges.
+    ``localCheckpoint`` truncates lineage, so the ``explain()`` of a
+    checkpointed operator hides the exchanges below the checkpoint. The
+    plan-dump tool (``tools/measure_queries.py --plans``) wraps plan
+    construction in this context and appends each captured subplan to its
+    capture file, so those exchanges show.
     """
     from contextlib import contextmanager
 

@@ -18,9 +18,9 @@ data-sized stage, reusing the order-aligned-bucket trick:
    local comparison against that group max);
 2. caller supplies an order-aligned bucket expression over ``cost`` (e.g.
    ``floor(cost)`` for a bounded numeric — bucket order must equal cost
-   order); per-bucket max gains are collected (bounded: n_buckets rows,
-   never data-sized) and folded into strictly-before-this-bucket running
-   maxima embedded as plan literals;
+   order); per-bucket max gains are collected (``bounded_collect``:
+   n_buckets rows, never data-sized) and folded into strictly-before-this-
+   bucket running maxima embedded as plan literals (``literal_lookup``);
 3. the "best gain at any strictly cheaper cost" = greatest(bucket offset,
    within-bucket window max over ROWS UNBOUNDED PRECEDING..1 PRECEDING) —
    the window is PARTITIONED by bucket, parallel across buckets;
@@ -52,6 +52,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from . import bounded_collect, literal_lookup
+
 #: driver-side offset-table cap — one row per bucket is "bounded metadata"
 #: only while the bucket function is a coarse split of the cost domain
 MAX_BUCKETS = 100_000
@@ -77,45 +79,22 @@ def skyline_2d(
         .agg(F.max(gain_col).alias("__gmax"))
         .withColumn("__bk", bucket)
     )
-    # The bounded-collect contract: one row per bucket. A near-distinct
-    # bucket expression would silently turn this into a data-sized driver
-    # collect and a plan-bloating literal map — so the JOB ITSELF is
-    # bounded with limit(cap + 1) and the overflow rejected loudly
-    # (round-6 ADVICE: a post-hoc len() check fires only after the
-    # unbounded collect has already pulled every bucket to the driver).
-    totals = (
-        per.groupBy("__bk")
-        .agg(F.max("__gmax").alias("__m"))
-        .limit(MAX_BUCKETS + 1)
-        .collect()
+    totals = bounded_collect(
+        per.groupBy("__bk").agg(F.max("__gmax").alias("__m")),
+        "__bk",
+        MAX_BUCKETS,
+        f"skyline_2d: bucket expression over {cost_col!r}",
     )
-    if len(totals) > MAX_BUCKETS:
-        raise ValueError(
-            f"skyline_2d: bucket expression produced more than "
-            f"{MAX_BUCKETS} buckets; coarsen the bucket function — it must "
-            "be a bounded, order-aligned split of the cost domain, not a "
-            "near-distinct key"
-        )
-    if any(r["__bk"] is None for r in totals):
-        raise ValueError(
-            f"skyline_2d: bucket expression over {cost_col!r} produced NULL; "
-            "a NULL cost/bucket has no defined position in the frontier "
-            "order — filter it first"
-        )
     # strictly-before-this-bucket running max, folded driver-side (bounded:
-    # one row per bucket) into plan literals
+    # one row per bucket) into plan literals; NULL where nothing precedes
     offsets: list[tuple[object, object]] = []
     best = None
-    for row in sorted(totals, key=lambda r: r["__bk"]):
-        offsets.append((row["__bk"], best))
+    for row in totals:
+        if best is not None:
+            offsets.append((row["__bk"], best))
         if best is None or (row["__m"] is not None and row["__m"] > best):
             best = row["__m"]
-    nonnull = [(bk, off) for bk, off in offsets if off is not None]
-    if nonnull:
-        off_map = F.create_map(*[F.lit(x) for bk, off in nonnull for x in (bk, off)])
-        base: Column = F.element_at(off_map, F.col("__bk"))
-    else:
-        base = F.lit(None)
+    base = literal_lookup(offsets, F.col("__bk"), None)
     w = (
         Window.partitionBy("__bk")
         .orderBy(cost_col)

@@ -14,18 +14,18 @@ data-sized stage distributed, in two forms.
    ``(bucket ASC, *order_cols ASC)`` — e.g. the first hex character of an
    md5 ordering key (lowercase-hex string order == numeric order, so the
    leading character IS an order-aligned 16-way split);
-2. per-bucket totals are collected to the driver (bounded: n_buckets rows,
-   never data-sized) and folded into cumulative offsets embedded as plan
-   literals;
+2. per-bucket totals are collected to the driver (``bounded_collect``:
+   n_buckets rows, never data-sized) and folded into cumulative offsets
+   embedded as plan literals (``literal_lookup``);
 3. running sum = offset[bucket] + within-bucket window sum (Window
    partitioned by the bucket — parallel across buckets).
 
-100 TB posture: TWO passes over the input lineage (the totals job and the
-window job — collapse to one stored read with ``materialize=True``), one
-partial-agg shuffle for the totals, one bounded collect, one
-hash-partitioned window; no ``Exchange SinglePartition`` anywhere (explicitly asserted for q97 in tests/test_prefix_sum_property.py;
-the corpus-wide guard in tests/test_plans.py covers the related
-empty-partition-spec Window shape for every query).
+100 TB posture: two passes over the input lineage (the totals job and the
+window job), one partial-agg shuffle for the totals, one bounded collect,
+one hash-partitioned window; no ``Exchange SinglePartition`` anywhere
+(asserted for q97 in tests/test_prefix_sum_property.py; the corpus-wide
+guard in tests/test_plans.py covers the related empty-partition-spec Window
+shape for every query).
 
 ``banded_running_sums`` (per group, LAZY — the two-level banded window
 behind q145, q151, q169, q183 and q184): the same offset-plus-local sum,
@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from . import bounded_collect, literal_lookup
 
 #: bounded-collect contract: the per-bucket offset table must stay
 #: driver-sized. 4096 is ~16x the documented 16–256 sweet spot — generous
@@ -53,7 +55,6 @@ def bucketed_running_sum(
     order_cols: list[str],
     value_col: str,
     out_col: str = "running_sum",
-    materialize: bool = False,
 ) -> DataFrame:
     """Append ``out_col`` = SUM(value_col) over the global order
     ``(bucket_col, *order_cols)``, rows unbounded-preceding..current.
@@ -74,71 +75,32 @@ def bucketed_running_sum(
     per-bucket totals job runs HERE, at construction time (the offsets must
     become plan literals), and the returned DataFrame embeds that snapshot —
     if the input changes between construction and execution the result mixes
-    two snapshots. Cost accounting: the input lineage runs twice (once for
-    the totals job, once under the window job) unless ``materialize=True``,
-    which localCheckpoints the input so both jobs read stored blocks —
-    choose per the repo's measured recompute-vs-materialize rule (cheap
-    narrow lineage like tokenize+hash: recompute; wide/expensive lineage:
-    materialize).
+    two snapshots.
 
     NULL semantics (of ``value_col``) match the global window exactly: NULL
     values contribute nothing, and a row whose whole prefix is NULL-valued
     gets NULL (SQL SUM over zero non-null inputs) — hence the per-bucket
     non-null COUNT carried alongside the sum offsets.
     """
-    if materialize:
-        from . import materialize_once
-
-        df = materialize_once(df)
-    # The bounded-collect contract: one row per bucket. A near-distinct
-    # bucket_col would silently turn this into a data-sized driver collect
-    # and a plan-bloating literal map — so the JOB ITSELF is bounded with
-    # limit(cap + 1) and the overflow rejected loudly, same pattern as
-    # frontier.skyline_2d / sampling.stratified_budget_sample.
-    totals = (
-        df.groupBy(bucket_col)
-        .agg(F.sum(value_col).alias("__t"), F.count(value_col).alias("__c"))
-        .limit(MAX_BUCKETS + 1)
-        .collect()
+    totals = bounded_collect(
+        df.groupBy(bucket_col).agg(
+            F.sum(value_col).alias("__t"), F.count(value_col).alias("__c")
+        ),
+        bucket_col,
+        MAX_BUCKETS,
+        f"bucketed_running_sum: bucket_col {bucket_col!r}",
     )
-    if len(totals) > MAX_BUCKETS:
-        raise ValueError(
-            f"bucketed_running_sum: bucket_col {bucket_col!r} produced more "
-            f"than {MAX_BUCKETS} buckets; coarsen it — the bucket column "
-            "must be a bounded, order-aligned split of the global order "
-            "(16–256 buckets is the documented sweet spot), not a "
-            "near-distinct key"
-        )
-    if any(r[bucket_col] is None for r in totals):
-        raise ValueError(
-            f"bucketed_running_sum: bucket_col {bucket_col!r} contains NULLs; "
-            "a NULL bucket has no defined position in the bucket-aligned "
-            "global order — filter or coalesce it first"
-        )
-    offsets: list[tuple[object, int, int]] = []
+    sum_offs: list[tuple[object, int]] = []
+    cnt_offs: list[tuple[object, int]] = []
     acc = 0
     acc_cnt = 0
-    for row in sorted(totals, key=lambda r: r[bucket_col]):
-        offsets.append((row[bucket_col], acc, acc_cnt))
+    for row in totals:
+        sum_offs.append((row[bucket_col], acc))
+        cnt_offs.append((row[bucket_col], acc_cnt))
         acc += row["__t"] or 0
         acc_cnt += row["__c"]
-
-    if offsets:
-        sum_map = F.create_map(
-            *[F.lit(x) for bk, off, _ in offsets for x in (bk, off)]
-        )
-        cnt_map = F.create_map(
-            *[F.lit(x) for bk, _, cnt in offsets for x in (bk, cnt)]
-        )
-        base: Column = F.coalesce(
-            F.element_at(sum_map, F.col(bucket_col)), F.lit(0)
-        )
-        base_cnt: Column = F.coalesce(
-            F.element_at(cnt_map, F.col(bucket_col)), F.lit(0)
-        )
-    else:
-        base = F.lit(0)
-        base_cnt = F.lit(0)
+    base = literal_lookup(sum_offs, F.col(bucket_col), 0)
+    base_cnt = literal_lookup(cnt_offs, F.col(bucket_col), 0)
 
     w = (
         Window.partitionBy(bucket_col)

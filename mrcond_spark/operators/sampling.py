@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from . import seeded_hash60, seeded_md5
+from . import bounded_collect, literal_lookup, seeded_hash60, seeded_md5
 
 #: 2^60 + 1 — divisor mapping the 60-bit md5 prefix to u in (0, 1)
 U_DEN = float(2**60 + 1)
@@ -78,22 +78,14 @@ def stratified_sample_exact(
     """
     from .ntile import grouped_hash_rank
 
-    # limit(cap + 1) bounds the DRIVER PULL itself (round-6 ADVICE: a
-    # post-hoc len() check fires only after a near-distinct stratum
-    # expression has already collected data-sized counts to the driver).
-    counts = (
-        df.groupBy(F.col(stratum_col).cast("string").alias("__s"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .limit(MAX_STRATA + 1)
-        .collect()
+    counts = bounded_collect(
+        df.groupBy(F.col(stratum_col).cast("string").alias("__s")).agg(
+            F.count(F.lit(1)).alias("n")
+        ),
+        "__s",
+        MAX_STRATA,
+        f"stratified_sample_exact: stratum_col {stratum_col!r}",
     )
-    if len(counts) > MAX_STRATA:
-        raise ValueError(
-            f"stratified_sample_exact: more than {MAX_STRATA} strata "
-            "exceed the literal-map/collect cap"
-        )
-    if any(r["__s"] is None for r in counts):
-        raise ValueError("stratified_sample_exact: NULL stratum values")
     n_by_s = {r["__s"]: r["n"] for r in counts}
     total = sum(n_by_s.values())
     k_eff = min(k, total)
@@ -112,13 +104,7 @@ def stratified_sample_exact(
         [id_col],
         out_col=rank_col,
     )
-    if quotas:
-        qmap = F.create_map(
-            *[F.lit(x) for s, q in quotas.items() for x in (s, q)]
-        )
-        quota = F.element_at(qmap, F.col(stratum_col).cast("string"))
-    else:
-        quota = F.lit(0)
+    quota = literal_lookup(quotas.items(), F.col(stratum_col).cast("string"), None)
     return (
         ranked.withColumn(quota_col, quota.cast("bigint"))
         .filter(F.col(rank_col) <= F.col(quota_col))

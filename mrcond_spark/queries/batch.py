@@ -1539,11 +1539,12 @@ def q76(spark: SparkSession, sf: str) -> DataFrame:
     """,
     doc="NTILE decile bucketing of account balances (deterministic via the "
     "custkey tiebreak) + per-bucket stats. Uses operators/ntile.py's "
-    "distributed exact NTILE (range repartition + per-partition rank + "
-    "P-row offset collect) — bit-identical to the oracle's NTILE window "
-    "with NO single-partition sort anywhere in the plan. EAGER BUILDER: "
-    "the cutpoint-sketch and offset jobs run at construction time and "
-    "snapshot into plan literals (PLANS.md)",
+    "distributed exact NTILE (literal approx-percentile cutpoints bucket "
+    "the rows, the rank is prefix_sum.bucketed_running_sum of 1 over "
+    "(bucket, order) with a P-row offset collect) — bit-identical to the "
+    "oracle's NTILE window with NO single-partition sort anywhere in the "
+    "plan. EAGER BUILDER: the cutpoint-sketch and offset jobs run at "
+    "construction time and snapshot into plan literals (PLANS.md)",
     tags=("B15",),
 )
 def q77(spark: SparkSession, sf: str) -> DataFrame:

@@ -68,3 +68,21 @@ def test_global_rank_equals_window_row_number(spark_global, n, mod):
     )
     actual = sorted(map(tuple, global_rank(df, ["v", "tie"], out_col="r").collect()))
     assert actual == expected
+
+
+def test_null_first_order_column_raises(spark_global):
+    """A NULL in the first order column has no cutpoint bucket: both
+    entry points raise the kernel's ValueError instead of dying in the
+    driver's sort of the bucket table."""
+    import pytest
+
+    from mrcond_spark.operators.ntile import global_rank
+
+    df = spark_global.range(200).select(
+        F.when(F.col("id") % 7 != 0, F.col("id") % 50).alias("v"),
+        F.col("id").alias("tie"),
+    )
+    with pytest.raises(ValueError, match="contains NULLs"):
+        global_rank(df, ["v", "tie"])
+    with pytest.raises(ValueError, match="contains NULLs"):
+        global_ntile(df, 4, ["v", "tie"], partitions=5)

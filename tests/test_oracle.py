@@ -97,7 +97,14 @@ BANDED_QUERIES = sorted("""
     q183_rank_sum_drift q184_ks_drift
 """.split())
 
-#: Shuffle layouts each banded query must not notice.
+#: The queries whose builders fold a driver-side offset table into plan
+#: literals (q169, also banded, is in the list above).
+EAGER_OFFSET_QUERIES = sorted("""
+    q77_ntile_deciles q97_token_budget_cut q138_skyline_frontier
+    q167_key_skew_audit
+""".split())
+
+#: Shuffle layouts each banded or eager-offset query must not notice.
 LAYOUTS = [
     {"spark.sql.shuffle.partitions": "1"},
     {"spark.sql.shuffle.partitions": "7"},
@@ -105,10 +112,11 @@ LAYOUTS = [
 ]
 
 
-@pytest.mark.parametrize("name", BANDED_QUERIES)
+@pytest.mark.parametrize("name", BANDED_QUERIES + EAGER_OFFSET_QUERIES)
 def test_rows_do_not_depend_on_the_shuffle_layout(name, spark, sf_dir):
-    """Each banded query returns the same rows with one shuffle partition,
-    with seven, and with AQE off as in the session's own layout."""
+    """Each banded or eager-offset query returns the same rows with one
+    shuffle partition, with seven, and with AQE off as in the session's own
+    layout."""
 
     def rows():
         sdf = QUERIES[name].spark(spark, sf_dir)

@@ -80,7 +80,7 @@ def test_near_distinct_bucket_raises_before_data_sized_collect(spark_global):
     collect into a data-sized driver pull. The job itself is bounded with
     limit(MAX_BUCKETS + 1) and the overflow rejected loudly — the same
     contract its eager-builder siblings enforce (frontier.skyline_2d,
-    sampling.stratified_budget_sample)."""
+    sampling.stratified_sample_exact)."""
     import pytest
 
     from mrcond_spark.operators.prefix_sum import MAX_BUCKETS
@@ -94,21 +94,6 @@ def test_near_distinct_bucket_raises_before_data_sized_collect(spark_global):
     )
     with pytest.raises(ValueError, match="more than"):
         bucketed_running_sum(df, "bk", ["ord", "tie"], "val")
-
-
-def test_materialize_option_matches_recompute(spark_global):
-    """materialize=True (single stored read of the input lineage) must be
-    value-identical to the default two-scan path."""
-    df = spark_global.range(100).select(
-        F.col("id").alias("tie"),
-        ((F.col("id") * 37) % 100).alias("ord"),
-        (F.col("id") % 7).alias("val"),
-    ).withColumn("bk", (F.col("ord") / 25).cast("int"))
-    base = sorted(map(tuple, bucketed_running_sum(
-        df, "bk", ["ord", "tie"], "val").collect()))
-    mat = sorted(map(tuple, bucketed_running_sum(
-        df, "bk", ["ord", "tie"], "val", materialize=True).collect()))
-    assert base == mat
 
 
 def test_q97_plan_has_no_single_partition_exchange(spark_global, sf_dir):

@@ -88,3 +88,27 @@ def test_stratified_sample_matches_reference(spark_global, n, mod, k):
     assert len(out) == min(k, n)
     for r in out:
         assert 1 <= r["st_rank"] <= r["quota"] == quotas[r["g"]]
+
+
+def test_stratified_sample_rejects_null_stratum(spark_global):
+    """A NULL stratum has no quota: a loud ValueError, not a dropped row."""
+    import pytest
+
+    df = _frame(spark_global, 20, 3).select(
+        F.when(F.col("rid") % 5 != 0, F.col("g")).alias("g"), "rid"
+    )
+    with pytest.raises(ValueError, match="contains NULLs"):
+        stratified_sample_exact(df, "g", "rid", 5, "sd")
+
+
+def test_stratified_sample_rejects_too_many_strata(spark_global, monkeypatch):
+    """More strata than the cap fails before the count collect goes
+    data-sized; the cap is read at call time."""
+    import pytest
+
+    from mrcond_spark.operators import sampling
+
+    monkeypatch.setattr(sampling, "MAX_STRATA", 4)
+    df = _frame(spark_global, 40, 5).drop("hk")
+    with pytest.raises(ValueError, match="more than 4"):
+        stratified_sample_exact(df, "g", "rid", 5, "sd")

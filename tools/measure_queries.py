@@ -65,11 +65,10 @@ def main() -> None:
 
             os.makedirs(args.plans, exist_ok=True)
             buf = io.StringIO()
-            # capture the pre-checkpoint subplans too (r11-verdict item 8):
             # localCheckpoint truncates lineage, so the top-level explain of
-            # a checkpointed operator hides the exchanges added below the
-            # checkpoint — the tap records each materialize_once input's
-            # plan during query CONSTRUCTION so the capture file shows them
+            # a checkpointed operator hides the exchanges below the
+            # checkpoint: the tap records each materialize_once input's
+            # plan during construction so the capture file shows them
             with capture_preckpt_plans() as taps:
                 df = q.spark(spark, args.sf)
                 with redirect_stdout(buf):
