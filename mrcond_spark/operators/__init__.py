@@ -6,7 +6,8 @@ Each module documents the reference/north-star contract it implements and the
 
 from __future__ import annotations
 
-from collections.abc import Collection
+from collections.abc import Collection, Sequence
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
@@ -87,6 +88,24 @@ def literal_lookup(
     return F.coalesce(F.element_at(table, key), F.lit(default))
 
 
+def colliding_pairs(sig: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """The distinct ``(id_a, id_b)`` pairs, ``id_a < id_b``, among the rows of
+    ``sig`` (columns ``id`` plus ``keys``) that agree on every key: the
+    candidate step of the signature tiers (MinHash bands, SimHash
+    fingerprints, hyperplane buckets). One self-join shuffled on ``keys``,
+    so its cost tracks key collisions, never all pairs. ``sig`` feeds both
+    join sides; a caller whose signature comes from a UDF checkpoints it
+    first.
+    """
+    a, b = sig.alias("a"), sig.alias("b")
+    same = reduce(lambda x, y: x & y, [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys])
+    return (
+        a.join(b, same & (F.col("a.id") < F.col("b.id")))
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .distinct()
+    )
+
+
 #: Estimated input bytes per partition that ``ensure_parallelism`` spreads to.
 SPREAD_BYTES = 128 * 1024
 
@@ -122,6 +141,26 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     if target > 1 and df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def pin_width(df: DataFrame, *keys: str) -> DataFrame:
+    """``df`` hash-repartitioned on ``keys`` (round-robin without keys) into
+    one partition per core.
+
+    The rule: a stage that is byte-small but CPU-heavy (a Python verify
+    UDF, a per-pair levenshtein, a fan-out explode and self-join) gets one
+    partition per core, numbered by the user. AQE sizes a shuffle's reduce
+    side by bytes and cannot see the work per row, so it would coalesce
+    such a stage to a partition or two; a user-numbered repartition is
+    exempt from that coalescing. Keyed on the downstream grouping or join
+    key, the pin replaces the exchange that operator would plan anyway, so
+    it adds no shuffle.
+
+    Use this where the bytes understate the work. Use ``ensure_parallelism``
+    where the input is a scan or a checkpoint whose bytes do measure the
+    work: it spreads only inputs big enough to pay for the shuffle.
+    """
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, *keys)
 
 
 #: When not None, every ``materialize_once`` call appends its input's

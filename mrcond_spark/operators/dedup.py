@@ -4,10 +4,15 @@ Tiers:
 - exact_dedup          — hash-groupBy on normalized text (one shuffle).
 - minhash_lsh_pairs    — MinHash signatures over shingles, banded into LSH
                          buckets, candidate pairs via self-join *on bucket key*.
+- mllib_minhash_pairs  — the same tier on MLlib's MinHashLSH signatures, with
+                         an exact shingle-Jaccard verify.
 - simhash_pairs        — 64-bit SimHash fingerprints, candidates = equal
                          fingerprint (near-dup at hamming 0 on the bucketed key).
 - ngram_jaccard        — exact Jaccard over shingle sets for a candidate pair
                          set (verification stage after LSH candidate gen).
+
+The three pair operators above draw their candidates from one signature
+self-join, ``operators.colliding_pairs``.
 
 100 TB design: every stage is expressed as hash/groupBy/join on bounded-size
 keys — never an all-pairs comparison. The LSH self-join shuffles on
@@ -26,7 +31,24 @@ import pandas as pd  # noqa: F401
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from . import ensure_parallelism, materialize_once
+from . import colliding_pairs, ensure_parallelism, materialize_once, pin_width
+
+#: Seed of the MinHash permutations (``minhash_band_udf`` and MLlib's
+#: ``MinHashLSH``).
+SEED = 42
+#: MinHash signature length and LSH bands: two docs are candidates when all
+#: ``MINHASH_HASHES // MINHASH_BANDS`` hashes of any one band agree.
+MINHASH_HASHES = 32
+MINHASH_BANDS = 8
+#: Word-shingle width of the MinHash and Jaccard tiers.
+SHINGLE_N = 3
+#: Word-shingle width of the SimHash fingerprint.
+SIMHASH_SHINGLE_N = 2
+#: Disjoint 16-bit pieces of a 64-bit SimHash that ``simhash_near_pairs``
+#: buckets on; the pigeonhole bound allows ``max_hamming`` up to 3.
+SIMHASH_PIECES = 4
+#: HashingTF width of ``mllib_minhash_pairs``.
+MLLIB_NUM_FEATURES = 1 << 18
 
 
 def normalized_text(col: Column) -> Column:
@@ -143,7 +165,7 @@ def shingles_from_tokens(tok_col: Column, n: int = 3) -> Column:
     )
 
 
-def shingle_udf(n: int = 3, distinct: bool = True, drop_empty: bool = False):
+def shingle_udf(n: int = SHINGLE_N, drop_empty: bool = False):
     """Arrow-batched shingler: text -> array<string> of word n-grams.
 
     Semantics identical to ``array_distinct(shingles_from_tokens(split(
@@ -184,17 +206,16 @@ def shingle_udf(n: int = 3, distinct: bool = True, drop_empty: bool = False):
                     continue
             n_sh = max(len(toks) - n + 1, 1)
             grams = [" ".join(toks[i : i + n]) for i in range(n_sh)]
-            if distinct:
-                grams = list(dict.fromkeys(grams))
-            out.append(grams)
+            out.append(list(dict.fromkeys(grams)))
         return pd.Series(out)
 
     return sh
 
 
-def minhash_band_udf(num_hashes: int = 32, bands: int = 8, shingle_n: int = 3, seed: int = 42):
+def minhash_band_udf():
     """Arrow-batched MinHash band-bucket computation: text -> array<long> of
-    one LSH bucket id per band.
+    one LSH bucket id per band (``MINHASH_HASHES`` hashes over
+    ``SHINGLE_N``-word shingles, folded into ``MINHASH_BANDS`` bands).
 
     Per record batch: shingle in Python, crc32 each shingle (C speed), then a
     single numpy broadcast ``(a_k * crc + b_k) mod p`` -> min over shingles
@@ -206,9 +227,7 @@ def minhash_band_udf(num_hashes: int = 32, bands: int = 8, shingle_n: int = 3, s
     from pyspark.sql.functions import pandas_udf
     import pandas as pd
 
-    if num_hashes % bands != 0:
-        raise ValueError(f"bands ({bands}) must divide num_hashes ({num_hashes})")
-    rows_per_band = num_hashes // bands
+    rows_per_band = MINHASH_HASHES // MINHASH_BANDS
 
     @pandas_udf("array<long>")
     def band_buckets(texts: pd.Series) -> pd.Series:
@@ -217,10 +236,10 @@ def minhash_band_udf(num_hashes: int = 32, bands: int = 8, shingle_n: int = 3, s
 
         import numpy as np
 
-        rng = np.random.RandomState(seed)
+        rng = np.random.RandomState(SEED)
         prime = (1 << 61) - 1
-        a = rng.randint(1, prime, size=num_hashes, dtype=np.int64).astype(np.uint64)
-        b = rng.randint(0, prime, size=num_hashes, dtype=np.int64).astype(np.uint64)
+        a = rng.randint(1, prime, size=MINHASH_HASHES, dtype=np.int64).astype(np.uint64)
+        b = rng.randint(0, prime, size=MINHASH_HASHES, dtype=np.int64).astype(np.uint64)
         # explicit class: Python re \s is Unicode-aware (wider than BOTH
         # Java and RE2); the oracles tokenize with RE2 \s = [ \t\n\f\r]
         ws = re.compile("[ \t\n\f\r]+")
@@ -228,20 +247,20 @@ def minhash_band_udf(num_hashes: int = 32, bands: int = 8, shingle_n: int = 3, s
         out = []
         for text in texts:
             toks = [t for t in ws.split((text or "").strip().lower()) if t]
-            n_sh = max(len(toks) - shingle_n + 1, 1)
+            n_sh = max(len(toks) - SHINGLE_N + 1, 1)
             crcs = np.fromiter(
                 (
-                    zlib.crc32(" ".join(toks[i : i + shingle_n]).encode())
+                    zlib.crc32(" ".join(toks[i : i + SHINGLE_N]).encode())
                     for i in range(n_sh)
                 ),
                 dtype=np.uint64,
                 count=n_sh,
             )
-            # (num_hashes, n_shingles) affine -> min per hash
+            # (MINHASH_HASHES, n_shingles) affine -> min per hash
             sig = ((a[:, None] * crcs[None, :] + b[:, None]) % prime).min(axis=1)
-            bandsig = sig.reshape(bands, rows_per_band)
+            bandsig = sig.reshape(MINHASH_BANDS, rows_per_band)
             # fold each band's rows into one bucket id (polynomial mix)
-            bucket = np.zeros(bands, dtype=np.uint64)
+            bucket = np.zeros(MINHASH_BANDS, dtype=np.uint64)
             for r in range(rows_per_band):
                 bucket = bucket * np.uint64(1000003) + bandsig[:, r]
             out.append((bucket % np.uint64(1 << 62)).astype(np.int64))
@@ -251,20 +270,14 @@ def minhash_band_udf(num_hashes: int = 32, bands: int = 8, shingle_n: int = 3, s
 
 
 def minhash_lsh_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Candidate near-duplicate pairs (id_a < id_b) via banded MinHash-LSH.
 
-    rows/bands = num_hashes/bands hashes per band; two docs are candidates if
-    any band bucket matches. The self-join key is (band_idx, bucket) — the
-    shuffle is by bucket, never all-pairs.
+    Two docs are candidates if any band bucket matches. The self-join key is
+    (band_idx, bucket) — the shuffle is by bucket, never all-pairs.
     """
-    buckets = minhash_band_udf(num_hashes, bands, shingle_n)
+    buckets = minhash_band_udf()
     df = ensure_parallelism(df)
     # both sides of the self-join reference this UDF stage; compute it once
     banded = materialize_once(
@@ -273,18 +286,7 @@ def minhash_lsh_pairs(
             F.posexplode(buckets(F.col(text_col))).alias("band", "bucket"),
         )
     )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    return colliding_pairs(banded, ["band", "bucket"])
 
 
 def minhash_probe_reference(
@@ -292,9 +294,6 @@ def minhash_probe_reference(
     reference_df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """Incremental near-dup candidates: NEW-batch docs probed against a
     REFERENCE corpus's band index — ``(new_id, ref_id)`` pairs, one row
@@ -313,7 +312,7 @@ def minhash_probe_reference(
     are the NEXT batch's self-join at |new|-scale, which
     `minhash_lsh_pairs` covers).
     """
-    buckets = minhash_band_udf(num_hashes, bands, shingle_n)
+    buckets = minhash_band_udf()
 
     def banded(df: DataFrame, out_id: str) -> DataFrame:
         return ensure_parallelism(df).select(
@@ -335,9 +334,7 @@ def mllib_minhash_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     num_hash_tables: int = 8,
-    shingle_n: int = 3,
     max_jaccard_distance: float = 0.6,
-    num_features: int = 1 << 18,
 ) -> DataFrame:
     """MLlib-native near-dup tier: HashingTF over shingles -> MinHashLSH
     signatures -> explicit banded self-join -> exact Jaccard verify (SURVEY
@@ -360,17 +357,19 @@ def mllib_minhash_pairs(
     # compute cost — recomputing per consumer beats checkpoint block IO
     sh = (
         ensure_parallelism(df)
-        .select(F.col(id_col).alias("id"), shingle_udf(shingle_n)(F.col(text_col)).alias("sh"))
+        .select(F.col(id_col).alias("id"), shingle_udf()(F.col(text_col)).alias("sh"))
         # Defensive only: shingle_udf emits >=1 gram even for short/empty
         # text (a single sub-n-token gram), so this never drops a row and
         # MinHashLSH never sees an all-zero vector. Kept as a guard against
         # a future shingle implementation that CAN return empty.
         .filter(F.size("sh") > 0)
     )
-    tf = HashingTF(inputCol="sh", outputCol="features", numFeatures=num_features, binary=True)
+    tf = HashingTF(
+        inputCol="sh", outputCol="features", numFeatures=MLLIB_NUM_FEATURES, binary=True
+    )
     feat = tf.transform(sh)
     model = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=42
+        inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=SEED
     ).fit(feat)
     # hashes: array of 1-dim vectors, one minhash per table -> (table, hval);
     # computed once — the TF+LSH transform would otherwise run per join side
@@ -379,21 +378,10 @@ def mllib_minhash_pairs(
         .select("id", F.posexplode(F.col("hashes")).alias("table", "hvec"))
         .select("id", "table", vector_to_array(F.col("hvec"))[0].alias("hval"))
     )
-    a, b = sig.alias("a"), sig.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.table") == F.col("b.table"))
-            & (F.col("a.hval") == F.col("b.hval"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
     # materialized: tiny (id pairs), but consumed three times below (member
     # extraction + the two verify joins) and its lineage is the whole
     # sig self-join
-    cand = materialize_once(cand)
+    cand = materialize_once(colliding_pairs(sig, ["table", "hval"]))
     # re-shingle ONLY candidate-pair members for the exact verify: the
     # candidate id set is tiny, so a broadcast join filters the corpus BEFORE
     # the shingle UDF — two near-free passes instead of two full-corpus ones.
@@ -407,32 +395,14 @@ def mllib_minhash_pairs(
     docs_small = ensure_parallelism(df).join(
         F.broadcast(members), F.col(id_col) == F.col("mid")
     )
-    sh_small = docs_small.select(
-        F.col(id_col).alias("id"), shingle_udf(shingle_n)(F.col(text_col)).alias("sh")
-    )
-    # candidate set is byte-small -> AQE would coalesce the verify stage to 1
-    # partition; explicit repartition keeps exact-Jaccard verification wide
-    cand = cand.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    sa = sh_small.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    sb = sh_small.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                1
-                - F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.greatest(F.size(F.array_union("sh_a", "sh_b")), F.lit(1)),
-                4,
-            ).alias("jaccard_dist"),
-        )
-        .filter(F.col("jaccard_dist") <= max_jaccard_distance)
-    )
+    # the candidate set is byte-small and the verify CPU-heavy (pin_width)
+    verified = ngram_jaccard(pin_width(cand), docs_small, text_col=text_col, id_col=id_col)
+    return verified.select(
+        "id_a", "id_b", F.round(1 - F.col("jaccard"), 4).alias("jaccard_dist")
+    ).filter(F.col("jaccard_dist") <= max_jaccard_distance)
 
 
-def simhash64_udf(shingle_n: int = 2, hash_fn: str = "blake2b"):
+def simhash64_udf(hash_fn: str = "blake2b"):
     """Arrow-batched 64-bit SimHash: text -> signed BIGINT fingerprint.
 
     Per shingle: an 8-byte digest (C speed); per doc: numpy unpackbits ->
@@ -467,10 +437,11 @@ def simhash64_udf(shingle_n: int = 2, hash_fn: str = "blake2b"):
         out = np.empty(len(texts), dtype=np.int64)
         for j, text in enumerate(texts):
             toks = [t for t in ws.split((text or "").strip(" ").lower()) if t]
-            n_sh = max(len(toks) - shingle_n + 1, 1)
+            n_sh = max(len(toks) - SIMHASH_SHINGLE_N + 1, 1)
             digests = np.frombuffer(
                 b"".join(
-                    digest8(" ".join(toks[i : i + shingle_n]).encode()) for i in range(n_sh)
+                    digest8(" ".join(toks[i : i + SIMHASH_SHINGLE_N]).encode())
+                    for i in range(n_sh)
                 ),
                 dtype=np.uint8,
             ).reshape(n_sh, 8)
@@ -490,12 +461,7 @@ def simhash_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id")
             F.col(id_col).alias("id"), simhash64_udf()(F.col(text_col)).alias("sim")
         )
     )
-    a, b = sig.alias("a"), sig.alias("b")
-    return (
-        a.join(b, (F.col("a.sim") == F.col("b.sim")) & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    return colliding_pairs(sig, ["sim"])
 
 
 def simhash_near_pairs(
@@ -503,26 +469,27 @@ def simhash_near_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 3,
-    pieces: int = 4,
     hash_fn: str = "blake2b",
 ) -> DataFrame:
     """Near-duplicate pairs within ``max_hamming`` bits of SimHash distance.
 
     Scale shape (the classic piece-bucketing construction): split the 64-bit
-    fingerprint into ``pieces`` disjoint chunks; by pigeonhole, any pair
-    within hamming <= pieces-1 shares at least one EXACT chunk, so candidate
-    generation is an equi-join on (piece_idx, piece_value) — one hash
-    shuffle, never all-pairs. Verification is a JVM-side ``bit_count(xor)``
-    on the candidate set. Requires ``max_hamming < pieces`` for the recall
-    guarantee.
+    fingerprint into ``SIMHASH_PIECES`` disjoint chunks; by pigeonhole, any
+    pair within hamming < SIMHASH_PIECES shares at least one EXACT chunk, so
+    candidate generation is an equi-join on (piece_idx, piece_value) — one
+    hash shuffle, never all-pairs. Verification is a JVM-side
+    ``bit_count(xor)`` on the candidate set. Requires ``max_hamming <
+    SIMHASH_PIECES`` for the recall guarantee.
+
+    The self-join is written out here rather than taken from
+    ``colliding_pairs``: it carries each side's full ``sim`` into the
+    per-pair Hamming verify, and the verify filters before the distinct.
     """
-    if max_hamming >= pieces:
+    if max_hamming >= SIMHASH_PIECES:
         raise ValueError(
-            f"pigeonhole guarantee needs max_hamming ({max_hamming}) < pieces ({pieces})"
+            f"pigeonhole guarantee needs max_hamming ({max_hamming}) < {SIMHASH_PIECES}"
         )
-    if 64 % pieces != 0:
-        raise ValueError(f"pieces ({pieces}) must divide 64")
-    width = 64 // pieces
+    width = 64 // SIMHASH_PIECES
     mask = (1 << width) - 1
     sig = materialize_once(
         ensure_parallelism(df).select(
@@ -532,7 +499,7 @@ def simhash_near_pairs(
     )
     chunks = [
         F.shiftrightunsigned(F.col("sim"), p * width).bitwiseAND(F.lit(mask))
-        for p in range(pieces)
+        for p in range(SIMHASH_PIECES)
     ]
     exploded = sig.select("id", "sim", F.posexplode(F.array(*chunks)).alias("piece", "pval"))
     a, b = exploded.alias("a"), exploded.alias("b")
@@ -554,14 +521,14 @@ def simhash_near_pairs(
 
 
 def ngram_jaccard(
-    pairs: DataFrame, docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
+    pairs: DataFrame, docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Exact shingle-set Jaccard for candidate pairs (id_a, id_b).
 
     Verification stage: joins the (small) candidate set back to the corpus
     twice; array intersection/union are JVM built-ins.
     """
-    sh = docs.select(F.col(id_col).alias("id"), shingle_udf(n)(F.col(text_col)).alias("sh"))
+    sh = docs.select(F.col(id_col).alias("id"), shingle_udf()(F.col(text_col)).alias("sh"))
     return (
         pairs.join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
         .join(sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")

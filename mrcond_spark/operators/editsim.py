@@ -54,7 +54,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import materialize_once
+from . import materialize_once, pin_width
 
 
 def _short_value_pairs(short_rows: DataFrame, k: int) -> DataFrame:
@@ -76,29 +76,26 @@ def _short_value_pairs(short_rows: DataFrame, k: int) -> DataFrame:
 
 def _value_universe(rows: DataFrame) -> DataFrame:
     """Collapse ``(id, s)`` rows to the distinct VALUE universe
-    ``(s, cnt, vid, len)`` with an explicit keyed repartition.
+    ``(s, cnt, vid, len)``, width-pinned on ``s`` (``pin_width``).
 
-    The repartition is load-bearing (commit 028c46f / PERF.md sf1 finding):
-    the groupBy's exchange is small enough at bench scale that AQE coalesces
-    it to ONE partition, the downstream localCheckpoint FREEZES that layout,
-    and the entire candidate pipeline (tagging, gram explode, prefix
-    self-join) then runs single-threaded — measured 22 s for q180 at sf0.1
-    vs ~4 s pinned. User ``repartition(n, cols)`` calls are exempt from AQE
-    coalescing, which is exactly why this is a repartition and not a
-    shuffle-partition hint; tests/test_plans.py pins the materialized
-    layout so it cannot silently regress to one partition."""
-    return (
+    The pin is load-bearing (PERF.md sf1 finding): the groupBy's exchange
+    is byte-small at bench scale, the downstream localCheckpoint freezes
+    its layout, and the whole candidate pipeline (tagging, gram explode,
+    prefix self-join) ran single-threaded without it — 22 s for q180 at
+    sf0.1 vs ~4 s pinned. tests/test_plans.py pins the materialized
+    layout."""
+    return pin_width(
         rows.groupBy("s")
         .agg(F.count("*").alias("cnt"), F.min("id").alias("vid"))
-        .withColumn("len", F.length("s"))
-        .repartition(rows.sparkSession.sparkContext.defaultParallelism, "s")
+        .withColumn("len", F.length("s")),
+        "s",
     )
 
 
 def _ranked_grams(vals: DataFrame, q: int) -> DataFrame:
     """Frequency-ordered occurrence-tagged gram arrays per value, one row per
-    value with at least one gram: ``(vid, len, ord)``, checkpointed with an
-    explicit keyed repartition.
+    value with at least one gram: ``(vid, len, ord)``, checkpointed after a
+    width pin on ``vid`` (``pin_width``).
 
     Occurrence numbering is computed ARRAY-SIDE per value (count equal grams
     at or before each position): O(len^2) substring compares inside one JVM
@@ -106,7 +103,7 @@ def _ranked_grams(vals: DataFrame, q: int) -> DataFrame:
     exchange at all, and len is a short join key (16-80 chars), not a
     document.
 
-    NOTE (round-10): a position filter on these tagged grams
+    NOTE: a position filter on these tagged grams
     (|pos_a - pos_b| <= k in the candidate join) is UNSOUND and was reverted
     after the brute-force parity test caught it dropping true pairs: the
     tag-matched occurrences (i-th occurrence of a gram on both sides) need
@@ -123,15 +120,11 @@ def _ranked_grams(vals: DataFrame, q: int) -> DataFrame:
     shingle sets — checkpoint I/O there costs more than the exchange-reuse
     it replaces.
 
-    The keyed repartition is the ``_value_universe`` lesson at a SECOND
-    site (round-11): ranked's groupBy exchange is byte-small at bench scale
-    (~160 KiB), AQE coalesces it to ONE partition, and the lazy checkpoint
-    FREEZES that layout — the prefix explode, the candidate self-join's
-    probe side (~4.9M pairs at sf0.1) and the distinct's shuffle WRITE
-    (56 MiB, observed max/median task ratio ~170,000x) then all ran on one
-    core. AQE sizes reduce stages by shuffle BYTES and is blind to the
-    CPU/row fan-out of the explode+join above them (PERF.md q139 finding);
-    user repartitions are AQE-exempt. Measured interleaved min-of-4 at
+    The pin is the ``_value_universe`` rule at a second site: ranked's
+    groupBy exchange is byte-small at bench scale (~160 KiB), and without
+    the pin the prefix explode, the candidate self-join's probe side (~4.9M
+    pairs at sf0.1) and the distinct's 56 MiB shuffle write all ran on one
+    core behind the frozen checkpoint. Measured interleaved min-of-4 at
     sf0.1: q180 4.76 -> 2.74 s, hash-identical. Pinned by
     tests/test_plans.py like the value universe's layout.
     """
@@ -158,10 +151,7 @@ def _ranked_grams(vals: DataFrame, q: int) -> DataFrame:
         .groupBy("vid", "len")
         .agg(F.array_sort(F.collect_list(F.struct("tf", "tok"))).alias("ord"))
     )
-    return materialize_once(
-        ranked.repartition(vals.sparkSession.sparkContext.defaultParallelism, "vid"),
-        eager=False,
-    )
+    return materialize_once(pin_width(ranked, "vid"), eager=False)
 
 
 def edit_distance_join(

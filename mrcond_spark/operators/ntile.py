@@ -26,7 +26,8 @@ bucket assignment with every data-sized stage distributed:
 Exactness does NOT depend on the sketch's accuracy — any deterministic
 cutpoints yield correct ranks; accuracy only balances bucket sizes (skew in
 the order column degrades balance, not correctness). A NULL in the first
-order column falls in no bucket and raises the kernel's ``ValueError``.
+order column has no place in the global order: the sketch aggregate also
+counts that column's non-NULL values, and a shortfall raises ``ValueError``.
 100 TB posture: one sketch pass, one shuffle on the bucket id, one P-row
 collect, no single-partition exchange anywhere.
 """
@@ -50,8 +51,8 @@ def global_rank(
     as a standalone primitive. EAGER + SNAPSHOT CONTRACT like
     ``prefix_sum.bucketed_running_sum``: the cutpoint sketch and the
     kernel's per-bucket totals jobs run at construction and fold into plan
-    literals. ``order_cols[0]`` must be NULL-free: a NULL falls in no
-    cutpoint bucket and raises the kernel's ``ValueError``.
+    literals. ``order_cols[0]`` must be NULL-free; a NULL raises
+    ``ValueError`` naming it.
 
     Skew note: parallelism comes from cutpoints over ``order_cols[0]``, so a
     (near-)constant first column degenerates to few buckets — correct but
@@ -71,13 +72,20 @@ def _ranked(
     key = order_cols[0]
 
     # 1. driver-side cutpoints (P-1 values; deduped — skewed keys collapse
-    # buckets, which costs balance, not correctness) and the row count, in
-    # one aggregate
+    # buckets, which costs balance, not correctness), the row count and the
+    # key's non-NULL count, in one aggregate
     fractions = [i / P for i in range(1, P)]
     sketch = df.agg(
         F.percentile_approx(key, fractions, 10_000).alias("cuts"),
         F.count(F.lit(1)).alias("n"),
+        F.count(key).alias("n_key"),
     ).collect()[0]
+    if sketch["n_key"] < sketch["n"]:
+        raise ValueError(
+            f"global_rank/global_ntile: first order column {key!r} contains "
+            f"NULLs ({sketch['n'] - sketch['n_key']} rows); a NULL has no "
+            "defined position in the global order — filter or coalesce it first"
+        )
     cuts = sorted(set(c for c in (sketch["cuts"] or []) if c is not None))
 
     # 2. literal comparison chain: bucket = #cutpoints strictly below value

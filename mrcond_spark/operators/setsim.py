@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import pin_width
+
 
 def prefix_setsim_join(
     sets: DataFrame,
@@ -65,19 +67,13 @@ def prefix_setsim_join(
     sets = sets.select(F.col(id_col).alias("id"), F.col(set_col).alias("toks"))
     toks = sets.select("id", F.explode("toks").alias("tok"))
     freq = toks.groupBy("tok").agg(F.count("*").alias("tf"))
-    # Width pin at the THIN upstream exchange (round-12, replaces the r11
-    # verify-leg repartitions — rationale at the verify joins below): the
-    # AQE-exempt keyed repartition REPLACES the groupBy(id)'s own exchange
-    # (EnsureRequirements sees clustering(id) satisfied, guide §2.4), so it
-    # adds zero bytes — collect_list partials never shrink shuffle volume
-    # anyway — and everything downstream (prefix posting, candidate join
-    # output on the probe side, pair dedup on (id_a, ...) ⊇ {id}, and both
-    # broadcast verify joins) INHERITS the full-width hash(id) layout
-    # instead of whatever byte-based width AQE coalesces this exchange to.
-    n_part = sets.sparkSession.sparkContext.defaultParallelism
+    # Width pin (pin_width) at the THIN upstream exchange: it replaces the
+    # groupBy(id)'s own exchange, and everything downstream (prefix posting,
+    # candidate join output on the probe side, pair dedup on (id_a, ...) ⊇
+    # {id}, and both broadcast verify joins) inherits the full-width hash(id)
+    # layout. collect_list partials never shrink shuffle volume anyway.
     ranked = (
-        toks.join(freq, "tok")
-        .repartition(n_part, "id")
+        pin_width(toks.join(freq, "tok"), "id")
         .groupBy("id")
         .agg(F.array_sort(F.collect_list(F.struct("tf", "tok"))).alias("ord"))
     )
@@ -126,20 +122,17 @@ def prefix_setsim_join(
         )
         .distinct()
     )
-    # Verify-leg layout (round-12, supersedes the r11 thin-pair
-    # repartitions): the r11 fix pinned width with repartition(id_a) /
-    # repartition(id_b) around the verify joins. The round-12 sf1 plan
-    # audit (OPTIMIZATION_r12.md) showed that at scale AQE turns BOTH
-    # verify joins into broadcasts (the sets side is small relative to the
-    # candidate volume), and the mid-chain repartition(id_b) then ships
-    # candidates WITH the attached toks_a arrays — 33.8 GiB of exchange
-    # data at sf1 for a join that, being broadcast, has no distribution
-    # requirement at all. The width pin now lives at the thin ranked
-    # exchange above (hash(id) == hash(id_a) flows through the probe-side
-    # candidate join and the pair dedup), so the verify pipeline runs
-    # full-width with ZERO exchanges downstream of candidate generation.
-    # Where a future scale tips the verify joins back to sort-merge,
-    # EnsureRequirements inserts the needed exchanges as before.
+    # Verify legs carry no repartition of their own. At scale AQE turns
+    # BOTH verify joins into broadcasts (the sets side is small relative to
+    # the candidate volume), so a repartition(id_b) here would ship
+    # candidates WITH the attached toks_a arrays — 33.8 GiB of exchange at
+    # sf1 (OPTIMIZATION_r12.md) for a join with no distribution
+    # requirement. The width pin at the thin ranked exchange above flows
+    # through (hash(id) == hash(id_a) through the probe-side candidate join
+    # and the pair dedup), so the verify runs full-width with ZERO
+    # exchanges downstream of candidate generation. Where a future scale
+    # tips the verify joins back to sort-merge, EnsureRequirements inserts
+    # the needed exchanges.
     sa = sets.select(F.col("id").alias("id_a"), F.col("toks").alias("toks_a"))
     sb = sets.select(F.col("id").alias("id_b"), F.col("toks").alias("toks_b"))
     union = F.col("sz_a") + F.col("sz_b") - F.col("inter")
@@ -199,11 +192,9 @@ def prefix_containment_join(
     sets = sets.select(F.col(id_col).alias("id"), F.col(set_col).alias("toks"))
     toks = sets.select("id", F.explode("toks").alias("tok"))
     freq = toks.groupBy("tok").agg(F.count("*").alias("tf"))
-    # same thin-exchange width pin as prefix_setsim_join (rationale there)
-    n_part = sets.sparkSession.sparkContext.defaultParallelism
+    # same thin-exchange width pin as prefix_setsim_join
     ranked = (
-        toks.join(freq, "tok")
-        .repartition(n_part, "id")
+        pin_width(toks.join(freq, "tok"), "id")
         .groupBy("id")
         .agg(F.array_sort(F.collect_list(F.struct("tf", "tok"))).alias("ord"))
     )
@@ -239,9 +230,7 @@ def prefix_containment_join(
         .select("id_a", "id_b", "sz_a")
         .distinct()
     )
-    # same verify-leg layout as prefix_setsim_join (round-12: the width pin
-    # moved to the thin ranked exchange above; the r11 thin-pair
-    # repartitions are gone — rationale there)
+    # same verify-leg layout as prefix_setsim_join (rationale there)
     sa = sets.select(F.col("id").alias("id_a"), F.col("toks").alias("toks_a"))
     sb = sets.select(F.col("id").alias("id_b"), F.col("toks").alias("toks_b"))
     return (

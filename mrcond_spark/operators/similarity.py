@@ -5,6 +5,16 @@
 - lsh_ann_topk       — scale path: random-hyperplane LSH bucketing; candidates
                        share >= 1 of `tables` bucket keys, then exact cosine
                        re-rank within candidates.
+- ivf_ann_topk       — cluster-partitioned scale path: k-means cells from a
+                       bounded sample, each query probes `n_probe` cells.
+- embedding_near_dup_pairs — vector pairs with cosine >= threshold: LSH bucket
+                       candidates (``operators.colliding_pairs``), then an
+                       exact Arrow-batched cosine verify.
+- remove_embedding_dups — those pairs' components, min-id representative kept.
+- semantic_dedup     — SemDeDup: the same removal with candidates drawn
+                       within k-means cells instead of LSH buckets.
+
+The three top-k operators share one ranking tail, ``_top_k``.
 
 100 TB design: brute force is O(|Q|x|N|) and only sane for small query sets
 (it broadcasts the query set). The LSH variant shuffles on (table, bucket)
@@ -20,7 +30,17 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from . import ensure_parallelism, materialize_once, seeded_hash60
+from . import colliding_pairs, ensure_parallelism, materialize_once, pin_width, seeded_hash60
+
+#: Seed of the LSH hyperplanes and of the k-means sample and initial draw.
+SEED = 42
+#: Hyperplanes per LSH table and tables of ``embedding_near_dup_pairs``
+#: (and the defaults of ``lsh_ann_topk``).
+LSH_BITS = 8
+LSH_TABLES = 4
+#: Target sample rows and Lloyd iterations of ``sampled_kmeans_centroids``.
+KMEANS_FIT_SAMPLE = 4096
+KMEANS_ITERS = 5
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -68,12 +88,11 @@ def cosine_topk(
     k: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_dp: int = 4,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for the pinned query ids.
 
-    Returns (query_id, nbr_id, cos_r DOUBLE quantized to 4dp, rank). Ranking uses the
-    ROUNDED cosine + nbr_id tiebreak so results are float-order independent.
+    Returns (query_id, nbr_id, cos_r DOUBLE quantized to 4dp, rank), ranked
+    by ``_top_k``.
     """
     q = embeddings.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
@@ -86,9 +105,19 @@ def cosine_topk(
         .select(
             "query_id",
             "nbr_id",
-            F.round(cosine(F.col("qv"), F.col("nv")), round_dp).alias("cos_raw"),
+            F.round(cosine(F.col("qv"), F.col("nv")), 4).alias("cos_raw"),
         )
     )
+    return _top_k(scored, k)
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The ``k`` best ``(query_id, nbr_id, cos_raw)`` rows per query, as
+    ``(query_id, nbr_id, cos_r, rank)``. ``cos_raw`` is the cosine rounded
+    to 4 dp and ``nbr_id`` breaks its ties, so the ranking does not depend
+    on floating-point summation order. The window partitions by the
+    high-cardinality query id, never a global sort.
+    """
     w = Window.partitionBy("query_id").orderBy(F.col("cos_raw").desc(), F.col("nbr_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -102,16 +131,19 @@ def cosine_topk(
     )
 
 
-def lsh_buckets_udf(dim: int, bits: int, tables: int, seed: int = 42):
+def lsh_buckets_udf(bits: int, tables: int):
     """Vectorized random-hyperplane LSH bucketizer.
 
     Returns an Arrow-batched pandas_udf: array<float> embedding -> array<long>
     of one bucket id per hash table. One numpy matmul per record batch — the
     whole batch's (n x dim) matrix against a seeded (tables*bits x dim)
-    hyperplane matrix, signs packed per table into integer buckets.
+    hyperplane matrix, signs packed per table into integer buckets. ``dim``
+    is the batch's vector width; the planes ``SEED`` draws for a given width
+    are the same in every batch, so equal vectors share buckets.
 
-    Everything the UDF needs is defined inside the closure (cloudpickle
-    serializes it by value), so executors never need this package importable.
+    Everything the UDF needs is defined inside the closure or is a module
+    constant (cloudpickle serializes both by value), so executors never need
+    this package importable.
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -119,9 +151,9 @@ def lsh_buckets_udf(dim: int, bits: int, tables: int, seed: int = 42):
     def bucketize(vecs: pd.Series) -> pd.Series:
         import numpy as np
 
-        planes = np.random.RandomState(seed).standard_normal((tables * bits, dim))
-        weights = (1 << np.arange(bits)).astype("int64")
         mat = np.vstack(vecs.to_numpy()).astype("float64")  # (n, dim)
+        planes = np.random.RandomState(SEED).standard_normal((tables * bits, mat.shape[1]))
+        weights = (1 << np.arange(bits)).astype("int64")
         proj = mat @ planes.T  # (n, tables*bits)
         signs = (proj > 0).astype("int64").reshape(len(vecs), tables, bits)
         return pd.Series(list(signs @ weights))  # (n, tables) bucket ids
@@ -133,15 +165,14 @@ def lsh_ann_topk(
     embeddings: DataFrame,
     query_ids: list[int],
     k: int = 3,
-    dim: int = 64,
-    bits: int = 8,
-    tables: int = 4,
+    bits: int = LSH_BITS,
+    tables: int = LSH_TABLES,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: candidates share an LSH bucket in >=1 table, then
     exact cosine re-rank. Shuffle key = (table, bucket)."""
-    buckets = lsh_buckets_udf(dim, bits, tables)
+    buckets = lsh_buckets_udf(bits, tables)
 
     def bucketize(df: DataFrame, idname: str, vname: str) -> DataFrame:
         return df.select(
@@ -158,20 +189,10 @@ def lsh_ann_topk(
         .select("query_id", "qv", "nbr_id", "nv")
         .dropDuplicates(["query_id", "nbr_id"])
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_raw").desc(), F.col("nbr_id"))
-    return (
-        cand.select(
-            "query_id", "nbr_id", F.round(cosine(F.col("qv"), F.col("nv")), 4).alias("cos_raw")
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "nbr_id",
-            F.col("cos_raw").cast("decimal(10,4)").cast("double").alias("cos_r"),
-            F.col("rank").cast("int").alias("rank"),
-        )
+    scored = cand.select(
+        "query_id", "nbr_id", F.round(cosine(F.col("qv"), F.col("nv")), 4).alias("cos_raw")
     )
+    return _top_k(scored, k)
 
 
 def sampled_kmeans_centroids(
@@ -179,9 +200,6 @@ def sampled_kmeans_centroids(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     n_clusters: int = 16,
-    seed: int = 42,
-    fit_sample: int = 4096,
-    iters: int = 5,
 ):
     """Driver-side k-means fit over a BOUNDED sample — the shared index-build
     step for the cluster-partitioned operators (IVF ANN, semantic dedup).
@@ -222,15 +240,15 @@ def sampled_kmeans_centroids(
             "deterministically (they would be silently excluded from the "
             "centroid fit); assign unique non-NULL ids first"
         )
-    frac = min(1.0, (fit_sample * 1.2) / max(n_rows, 1))
-    # layout-independent ~frac sample: md5("kmeans{seed}:" + id) -> 60-bit
+    frac = min(1.0, (KMEANS_FIT_SAMPLE * 1.2) / max(n_rows, 1))
+    # layout-independent ~frac sample: md5("kmeans{SEED}:" + id) -> 60-bit
     # int; keep rows whose hash bucket (out of 2^40) is under frac * 2^40.
     # 2^40 resolution keeps the integer threshold meaningful out to
     # ~5e15-row corpora (a 2^20 denominator truncated to ZERO kept rows
     # past ~5e9 rows — a silent no-index cliff at exactly the scale this
     # build path exists for); max(1, ...) guards the residual rounding.
     denom = 1 << 40
-    hk = seeded_hash60(f"kmeans{seed}:", F.col(id_col))
+    hk = seeded_hash60(f"kmeans{SEED}:", F.col(id_col))
     sample_rows = (
         embeddings.filter((hk % denom) < max(1, int(frac * denom)))
         .select(F.col(id_col).alias("sid"), F.col(vec_col).alias("nv"))
@@ -251,12 +269,12 @@ def sampled_kmeans_centroids(
     # expanded-form distances (one matmul, no NxCxD temp); rough centroids
     # are enough — downstream recall comes from probe breadth / verify, not
     # centroid quality
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(SEED)
     centroids = sample[
         rng.choice(len(sample), size=min(n_clusters, len(sample)), replace=False)
     ]
     s2 = (sample * sample).sum(axis=1)[:, None]
-    for _ in range(iters):
+    for _ in range(KMEANS_ITERS):
         d2 = s2 - 2.0 * (sample @ centroids.T) + (centroids * centroids).sum(axis=1)[None, :]
         assign = d2.argmin(axis=1)
         for c in range(len(centroids)):
@@ -337,13 +355,12 @@ def ivf_ann_topk(
     n_probe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 42,
 ) -> DataFrame:
     """IVF (inverted-file) approximate nearest neighbors — the
     cluster-partitioned scale path (SURVEY E4 alternative to LSH).
 
-    Build: k-means over a BOUNDED sample (driver-side numpy, ``fit_sample``
-    rows) partitions the corpus into ``n_clusters`` cells; every vector
+    Build: k-means over a BOUNDED sample (driver-side numpy,
+    ``KMEANS_FIT_SAMPLE`` rows) partitions the corpus into ``n_clusters`` cells; every vector
     stores its cell id via one broadcast-centroid pass. Search: each query
     probes its OWN cell first (structural guarantee — see the probe-list
     comment) plus its ``n_probe - 1`` nearest remaining centroids, and
@@ -354,15 +371,11 @@ def ivf_ann_topk(
     n_probe, not centroid quality), assignment is a single broadcast-map
     stage over the corpus, and a search touches n_probe/n_clusters of the
     data. Storing the table physically partitioned by cell id turns each
-    probe into partition pruning. (Earlier shape ran a full-corpus MLlib
-    fit — ~10 scheduled jobs and a fit pass per iteration that a sampled
-    build doesn't pay; measured 1.5 s fit -> ~0 at sf0.1, and at real scale
-    the full-corpus fit is the difference between an index build that
-    finishes and one that doesn't.)
+    probe into partition pruning.
     """
     import numpy as np
 
-    # NOT materialized (round-4 re-measure): each stage below consumes the
+    # NOT materialized: each stage below consumes the
     # scan exactly once — count is a footer/metadata-cheap job, the sample
     # collect reads the data once, and the probe join reads it once more in
     # the final job. A localCheckpoint added a full write plus extra jobs
@@ -376,7 +389,7 @@ def ivf_ann_topk(
     # the fitted centroids identical under any input partitioning (and the
     # planted-duplicate invariant below holds regardless — belt and braces)
     centroids = sampled_kmeans_centroids(
-        embeddings, vec_col=vec_col, id_col=id_col, n_clusters=n_clusters, seed=seed
+        embeddings, vec_col=vec_col, id_col=id_col, n_clusters=n_clusters
     )
     if centroids is None:
         # empty corpus: no index to build and nothing to rank — return an
@@ -420,25 +433,12 @@ def ivf_ann_topk(
             F.round(cos_udf(F.col("qv"), F.col("nv").cast("array<double>")), 4).alias("cos_raw"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_raw").desc(), F.col("nbr_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "nbr_id",
-            F.col("cos_raw").cast("decimal(10,4)").cast("double").alias("cos_r"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    return _top_k(scored, k)
 
 
 def embedding_near_dup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.95,
-    dim: int = 64,
-    bits: int = 8,
-    tables: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -450,8 +450,10 @@ def embedding_near_dup_pairs(
     while weakly-similar pairs almost never collide, keeping candidate volume
     near-linear. The bucket self-join carries ONLY ids (the heavy vector
     arrays join back after pair dedup) — candidate shuffle stays id-sized.
+    The verify joins the vectors back onto the candidate pairs and keeps
+    those whose Arrow-batched cosine reaches ``threshold``.
     """
-    buckets = lsh_buckets_udf(dim, bits, tables)
+    buckets = lsh_buckets_udf(LSH_BITS, LSH_TABLES)
     # both self-join sides reference the bucketize-UDF stage; compute it once
     b = materialize_once(
         ensure_parallelism(embeddings).select(
@@ -459,54 +461,27 @@ def embedding_near_dup_pairs(
             F.posexplode(buckets(F.col(vec_col))).alias("table", "bucket"),
         )
     )
-    x, y = b.alias("x"), b.alias("y")
-    pairs = (
-        x.join(
-            y,
-            (F.col("x.table") == F.col("y.table"))
-            & (F.col("x.bucket") == F.col("y.bucket"))
-            & (F.col("x.id") < F.col("y.id")),
-        )
-        .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-        .distinct()
-    )
-    verified = _verify_cosine_pairs(embeddings, pairs, threshold, id_col, vec_col)
-    return verified.select(
-        "id_a",
-        "id_b",
-        F.round("cos", 4).cast("decimal(10,4)").cast("double").alias("cos_r"),
-    )
-
-
-def _verify_cosine_pairs(
-    embeddings: DataFrame,
-    cand: DataFrame,
-    threshold: float,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Shared exact-verify stage for candidate (id_a, id_b) pairs: join the
-    vectors back, Arrow-batched cosine, keep pairs >= threshold. The
-    candidate id-pair set is byte-small, so AQE would coalesce the
-    cosine-verify UDF to ~1 partition — the explicit repartition keeps the
-    verify stage parallel (user repartitions are AQE-exempt)."""
     va = embeddings.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
     vb = embeddings.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
     cos_udf = cosine_pairs_udf()
-    parallelism = embeddings.sparkSession.sparkContext.defaultParallelism
+    # the candidate pairs are byte-small and the verify CPU-heavy (pin_width)
     return (
-        cand.repartition(parallelism)
+        pin_width(colliding_pairs(b, ["table", "bucket"]))
         .join(va, "id_a")
         .join(vb, "id_b")
         .select("id_a", "id_b", cos_udf(F.col("va"), F.col("vb")).alias("cos"))
         .filter(F.col("cos") >= threshold)
+        .select(
+            "id_a",
+            "id_b",
+            F.round("cos", 4).cast("decimal(10,4)").cast("double").alias("cos_r"),
+        )
     )
 
 
 def remove_embedding_dups(
     embeddings: DataFrame,
     threshold: float = 0.95,
-    dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -519,7 +494,7 @@ def remove_embedding_dups(
     from .components import drop_non_representatives
 
     pairs = embedding_near_dup_pairs(
-        embeddings, threshold=threshold, dim=dim, id_col=id_col, vec_col=vec_col
+        embeddings, threshold=threshold, id_col=id_col, vec_col=vec_col
     )
     return drop_non_representatives(embeddings, pairs, id_col)
 
@@ -530,7 +505,6 @@ def semantic_dedup(
     n_clusters: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 42,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023, public
     arXiv:2303.09540): k-means-cluster the embedding space, verify cosine >=
@@ -570,18 +544,17 @@ def semantic_dedup(
         )
 
     centroids = sampled_kmeans_centroids(
-        embeddings, vec_col=vec_col, id_col=id_col, n_clusters=n_clusters, seed=seed
+        embeddings, vec_col=vec_col, id_col=id_col, n_clusters=n_clusters
     )
     if centroids is None:
         return embeddings  # empty corpus: nothing to dedup
-    # Cell-grouped verify (round-12, guide §8 "move big rows once"): the
-    # r11 shape self-joined a byte-small (id, cell) checkpoint into
-    # candidate PAIRS and re-attached a vector to BOTH sides of every pair
-    # — at sf1 that is ~12M pairs x two 64-double arrays through two joins
-    # and the Arrow boundary (~12 GB crossing for a 10 MB corpus). Each
-    # vector now ships ONCE: one shuffle of (id, cell, vec) keyed by cell,
-    # and the per-cell pairwise cosines come from one numpy Gram matmul
-    # per group, emitting only the qualifying (id_a < id_b) pairs.
+    # Cell-grouped verify: each vector ships ONCE, in one shuffle of (id,
+    # cell, vec) keyed by cell, and the per-cell pairwise cosines come from
+    # one numpy Gram matmul per group, emitting only the qualifying
+    # (id_a < id_b) pairs. A self-join into candidate PAIRS would re-attach
+    # a vector to BOTH sides of every pair: ~12M pairs x two 64-double
+    # arrays through two joins and the Arrow boundary at sf1 (~12 GB
+    # crossing for a 10 MB corpus).
     # Exactness: the Gram block's dot products ride BLAS dgemm, whose
     # blocked summation order can move the last ulp, so the cosine is
     # rounded to 4 dp before the >= gate (as cosine_topk does): a pair one

@@ -1968,7 +1968,7 @@ def q182(spark: SparkSession, sf: str) -> DataFrame:
     # under 2^63, and bigint hash-aggregation measurably beats Decimal128
     # state at 9.6M exploded rows. The DuckDB oracle's HUGEINT computes the
     # same exact values.
-    from ..operators import ensure_parallelism
+    from ..operators import ensure_parallelism, seeded_hash60
 
     # narrow 3-column projection, then guard: the md5 + 16x replicate
     # explode + bigint partial agg is expansion-heavy per row and must not
@@ -1982,16 +1982,9 @@ def q182(spark: SparkSession, sf: str) -> DataFrame:
             ).alias("key"),
         )
     )
-    hashed = li.withColumn(
-        "h",
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws(":", F.lit("seed182"), F.col("key"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long"),
-    )
+    # key comes from concat_ws and is never NULL, so every row draws a hash
+    # (seeded_hash60 maps a NULL key to NULL, like the oracle's ||).
+    hashed = li.withColumn("h", seeded_hash60("seed182:", F.col("key")))
     reps = hashed.withColumn("b", F.explode(F.sequence(F.lit(0), F.lit(15))))
     w = F.expr("(h div cast(power(3, b) as bigint)) % 3")
     per_rep = (

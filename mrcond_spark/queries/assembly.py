@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load
-from ..operators import text
+from ..operators import hex60, text
 from ..operators.prefix_sum import bucketed_running_sum
 from . import register
 
@@ -89,9 +89,7 @@ def _shuffle_key(seed: str) -> F.Column:
 def q96(spark: SparkSession, sf: str) -> DataFrame:
     d = load(spark, sf, "documents")
     hk = _shuffle_key("seed96")
-    shard = (
-        F.conv(F.substring(F.col("hk"), 1, 15), 16, 10).cast("long") % N_SHARDS
-    ).cast("int")
+    shard = (hex60(F.col("hk")) % N_SHARDS).cast("int")
     keyed = d.select("doc_id", hk.alias("hk")).withColumn("shard", shard)
     w = Window.partitionBy("shard").orderBy("hk", "doc_id")
     return (

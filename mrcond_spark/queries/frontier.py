@@ -162,19 +162,14 @@ def q139(spark: SparkSession, sf: str) -> DataFrame:
     # materialization point each side re-derives it (4 scans of the text
     # column in the executed plan). Lazy checkpoint: the gated candidate
     # set (<= |blocks| x MAX_BLOCK rows of 80-char heads) computes once.
-    # The keyed repartition AFTER the checkpoint is the q180 hazard's fix
-    # applied here (round-11 sf1 finding: the self-join's reduce stage is
-    # AQE-coalesced by BYTES — ~60 MB of candidate heads -> 2 partitions —
-    # while its real cost is the per-row levenshtein, so the verify leg
-    # ran near-serial: 21.2 s at sf1 on 2 cores). Both join inputs derive
-    # from this one user repartition on the join key, so EnsureRequirements
-    # inserts no further exchange, the join runs at cluster width, and AQE
-    # cannot coalesce a user-numbered layout: 73 -> ~13 s at sf1.
-    from ..operators import materialize_once
+    # The width pin AFTER the checkpoint (pin_width): the self-join's real
+    # cost is the per-row levenshtein, not its ~60 MB of candidate heads,
+    # which AQE coalesced to 2 partitions (73 -> ~13 s at sf1 pinned). Both
+    # join inputs derive from this one repartition on the join key, so
+    # EnsureRequirements inserts no further exchange.
+    from ..operators import materialize_once, pin_width
 
-    c = materialize_once(n.join(g, ["lang", "blk"]), eager=False).repartition(
-        spark.sparkContext.defaultParallelism, "lang", "blk"
-    )
+    c = pin_width(materialize_once(n.join(g, ["lang", "blk"]), eager=False), "lang", "blk")
     a = c.select(
         F.col("doc_id").alias("id_a"), "lang", "blk", F.col("head").alias("head_a")
     )

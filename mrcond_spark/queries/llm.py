@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..catalog import load
-from ..operators import dedup, multimodal, similarity, text
+from ..operators import dedup, multimodal, seeded_hash60, seeded_md5, similarity, text
 from . import register
 
 PINNED_VEC_IDS = [1, 2, 3, 4, 5]
@@ -829,9 +829,7 @@ def q83(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = load(spark, sf, "documents")
-    w = Window.partitionBy("lang").orderBy(
-        F.md5(F.concat(F.lit("seed42:"), F.col("doc_id").cast("string"))), "doc_id"
-    )
+    w = Window.partitionBy("lang").orderBy(seeded_md5("seed42:", F.col("doc_id")), "doc_id")
     return (
         d.select("lang", "doc_id")
         .withColumn("rn", F.row_number().over(w))
@@ -1341,7 +1339,7 @@ def q91(spark: SparkSession, sf: str) -> DataFrame:
         .select("doc_id", "source", "n_chars")
     )
     strat_w = Window.partitionBy("source").orderBy(
-        F.md5(F.concat(F.lit("seed91:"), F.col("doc_id").cast("string"))), "doc_id"
+        seeded_md5("seed91:", F.col("doc_id")), "doc_id"
     )
     surv = (
         deduped.withColumn("strat_rn", F.row_number().over(strat_w))
@@ -1438,11 +1436,7 @@ def q93(spark: SparkSession, sf: str) -> DataFrame:
             F.lit(1.0), F.col("total").cast("double") / (F.col("k") * F.col("n_docs"))
         ).alias("keep_p"),
     )
-    u = F.conv(
-        F.substring(F.md5(F.concat(F.lit("seed93:"), F.col("doc_id").cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("long") / F.lit(float(1 << 60))
+    u = seeded_hash60("seed93:", F.col("doc_id")) / F.lit(float(1 << 60))
     kept = (
         d.join(F.broadcast(probs), "source")
         .filter(u < F.col("keep_p"))

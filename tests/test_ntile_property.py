@@ -86,3 +86,24 @@ def test_null_first_order_column_raises(spark_global):
         global_rank(df, ["v", "tie"])
     with pytest.raises(ValueError, match="contains NULLs"):
         global_ntile(df, 4, ["v", "tie"], partitions=5)
+
+
+def test_null_first_order_column_is_named_however_the_sketch_cuts(spark_global):
+    """All-NULL first column (no cutpoints), some NULLs with one partition
+    (no cutpoints either) and some NULLs with five partitions all raise,
+    naming the caller's column rather than an internal one."""
+    import pytest
+
+    from mrcond_spark.operators.ntile import global_rank
+
+    ids = spark_global.range(200)
+    some = ids.select(
+        F.when(F.col("id") % 7 != 0, F.col("id") % 50).alias("v"), F.col("id").alias("tie")
+    )
+    every = ids.select(F.lit(None).cast("long").alias("v"), F.col("id").alias("tie"))
+    with pytest.raises(ValueError, match="'v' contains NULLs"):
+        global_rank(every, ["v", "tie"])
+    with pytest.raises(ValueError, match="'v' contains NULLs"):
+        global_ntile(some, 4, ["v", "tie"], partitions=1)
+    with pytest.raises(ValueError, match="'v' contains NULLs"):
+        global_ntile(some, 4, ["v", "tie"], partitions=5)

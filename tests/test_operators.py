@@ -78,6 +78,29 @@ def test_embedding_near_dup_planted_recall(spark):
     assert not (pairs - planted), f"false positives: {pairs - planted}"
 
 
+def test_lsh_tier_takes_the_vector_width_from_its_input(spark):
+    """The LSH hyperplanes follow the vectors' width: over 32-dim vectors
+    both LSH operators return the planted neighbours (a fixed 64-wide plane
+    matrix made the bucketizer's matmul raise inside the Python worker)."""
+    import random
+
+    rng = random.Random(11)
+    rows = []
+    for i in range(20):
+        v = [rng.gauss(0, 1) for _ in range(32)]
+        rows.append((i, v))
+        rows.append((i + 1000, [x + rng.gauss(0, 0.01) for x in v]))
+    df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<FLOAT>")
+    top = similarity.lsh_ann_topk(df, [0, 1, 2], k=1).collect()
+    assert {(r["query_id"], r["nbr_id"]) for r in top} == {(0, 1000), (1, 1001), (2, 1002)}
+    pairs = {
+        (r["id_a"], r["id_b"])
+        for r in similarity.embedding_near_dup_pairs(df, threshold=0.95).collect()
+    }
+    planted = {(i, i + 1000) for i in range(20)}
+    assert len(pairs & planted) >= 16 and not (pairs - planted), pairs
+
+
 def test_ivf_recall_vs_exact(spark, sf_dir):
     """E4: IVF with n_probe=8 of 16 cells recalls >= 60% of exact top-3 on
     the weakly-structured synthetic vectors (probing half the cells)."""

@@ -104,7 +104,16 @@ EAGER_OFFSET_QUERIES = sorted("""
     q167_key_skew_audit
 """.split())
 
-#: Shuffle layouts each banded or eager-offset query must not notice.
+#: The near-dup and ANN queries whose candidates come from a signature
+#: self-join (``operators.colliding_pairs``) or a top-k rank window.
+CANDIDATE_PAIR_QUERIES = sorted("""
+    q41_cosine_topk q47_minhash_lsh_pairs q48_simhash_pairs q49_ann_lsh
+    q54_embedding_near_dup q56_ann_ivf q57_mllib_minhash_pairs
+    q75_near_dup_removal
+""".split())
+
+#: Shuffle layouts each banded, eager-offset or candidate-pair query must
+#: not notice.
 LAYOUTS = [
     {"spark.sql.shuffle.partitions": "1"},
     {"spark.sql.shuffle.partitions": "7"},
@@ -112,11 +121,13 @@ LAYOUTS = [
 ]
 
 
-@pytest.mark.parametrize("name", BANDED_QUERIES + EAGER_OFFSET_QUERIES)
+@pytest.mark.parametrize(
+    "name", BANDED_QUERIES + EAGER_OFFSET_QUERIES + CANDIDATE_PAIR_QUERIES
+)
 def test_rows_do_not_depend_on_the_shuffle_layout(name, spark, sf_dir):
-    """Each banded or eager-offset query returns the same rows with one
-    shuffle partition, with seven, and with AQE off as in the session's own
-    layout."""
+    """Each banded, eager-offset or candidate-pair query returns the same
+    rows with one shuffle partition, with seven, and with AQE off as in the
+    session's own layout."""
 
     def rows():
         sdf = QUERIES[name].spark(spark, sf_dir)
